@@ -71,10 +71,6 @@ def duck_words_sql(col: str = "text") -> str:
     )
 
 
-def word_count(text: Column) -> Column:
-    return F.size(words(text)).cast("long")
-
-
 def token_count(text: Column) -> Column:
     """BPE-ish token count: word pieces + punctuation marks."""
     return F.size(F.regexp_extract_all(text, F.lit(TOKEN_PATTERN), 0)).cast("long")
@@ -106,16 +102,6 @@ def distinct_word_ratio(text: Column, w: Column | None = None) -> Column:
     return round_half_away(
         F.size(F.array_distinct(w)) / F.greatest(F.size(w), F.lit(1)).cast("double"),
         6,
-    )
-
-
-def punct_ratio(text: Column) -> Column:
-    """Punctuation chars / total chars."""
-    n_punct = F.length(text) - F.length(
-        F.regexp_replace(text, r"[^a-zA-Z0-9_\s]", "")
-    )
-    return round_half_away(
-        n_punct / F.greatest(F.length(text), F.lit(1)).cast("double"), 6
     )
 
 
@@ -190,27 +176,6 @@ def fingerprint(text: Column) -> Column:
     """Content fingerprint: md5 of the normalized text (hex string).
     Portable across engines; used as the exact-dedup key."""
     return F.md5(normalize_text(text))
-
-
-def word_shingles(text: Column, k: int = 5) -> Column:
-    """Distinct word k-grams (space-joined) -> array<string>. Documents
-    shorter than k words yield a single whole-text shingle so they still
-    participate in dedup; NULL/blank documents yield the EMPTY array (a
-    blank doc must not shingle to [''] — n identical blank docs would LSH-
-    collide into O(n^2) bogus pairs, the failure shingle_table's filter
-    exists to prevent). Design notes: docs/DESIGN.md#text-word-shingles"""
-    w = words(normalize_text(text))
-    n = F.size(w)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i, k)))
-    return (
-        # NULL must be tested BEFORE the blank case: greatest() ignores
-        # NULL, so the otherwise-branch would turn a NULL text into the
-        # [''] shingle (concat_ws over a NULL slice yields '').
-        F.when(n.isNull(), F.lit(None).cast("array<string>"))
-        .when(n == 0, F.array().cast("array<string>"))
-        .otherwise(F.array_distinct(sh))
-    )
 
 
 #: PII patterns applied in order — ORDER IS LOAD-BEARING (email before

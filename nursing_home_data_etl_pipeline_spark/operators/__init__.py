@@ -6,12 +6,10 @@ The most-used operators are re-exported here for library ergonomics.
 """
 
 from .aggregates import (  # noqa: F401
-    approx_stats,
     cube_agg,
     group_agg,
     pivot_agg,
     rollup_agg,
-    salted_group_agg,
     time_rollup,
     unpivot_stack,
 )
@@ -20,10 +18,8 @@ from .ranges import range_join_points  # noqa: F401
 from .chunking import chunk_table  # noqa: F401
 from .cleaning import (  # noqa: F401
     cast_all_to_string,
-    cast_columns,
     clean_table,
     normalize_column_names,
-    promote_types,
     rename_columns,
     trim_all,
 )
@@ -42,12 +38,9 @@ from .joins import (  # noqa: F401
     latest_per_key,
     left_enrich,
     merge_scd1,
-    semi_join,
 )
 from .multimodal import (  # noqa: F401
     decode_fake,
-    resize_fake,
-    sample_frames,
     with_binary_payload,
 )
 from .projections import (  # noqa: F401
@@ -56,7 +49,6 @@ from .projections import (  # noqa: F401
     select_columns_matching,
 )
 from .sampling import (  # noqa: F401
-    deterministic_sample,
     hash_split,
     stratified_deterministic_sample,
 )
@@ -66,12 +58,9 @@ from .similarity import (  # noqa: F401
     embedding_near_dup_pairs,
 )
 from .windows import (  # noqa: F401
-    lag_scaled,
     lags_scaled,
     running_agg,
     running_sum_scaled,
-    sessionize,
     top_k_global,
     top_k_per_group,
-    with_lag_delta,
 )

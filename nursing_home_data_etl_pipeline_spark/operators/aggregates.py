@@ -3,8 +3,7 @@ fill (the reference's CMS input arrives pre-aggregated). All built-in
 Spark: hash aggregation with map-side partials and AQE coalescing come
 free from Catalyst; never a UDF. groupBy().agg() on a high-cardinality
 key = one shuffle with partial aggregation, the canonical 100 TB-safe
-pattern; AQE handles skewed keys, :func:`salted_group_agg` the
-pathological ones."""
+pattern; AQE handles skewed keys."""
 
 from __future__ import annotations
 
@@ -58,50 +57,6 @@ def unpivot_stack(
         [F.col(c) for c in value_cols],
         var_name,
         value_name,
-    )
-
-
-def approx_stats(
-    df: DataFrame,
-    keys: Sequence[str],
-    distinct_col: str,
-    percentile_col: str,
-    percentiles: Sequence[float] = (0.5, 0.95),
-    rsd: float = 0.05,
-) -> DataFrame:
-    """Approximate aggregates: HyperLogLog++ distinct count + GK-sketch
-    quantiles. Sublinear state per group — the only sane way to compute
-    distincts/quantiles over 100 TB; exact variants shuffle every value.
-    """
-    return df.groupBy(*keys).agg(
-        F.approx_count_distinct(distinct_col, rsd=rsd).alias("approx_distinct"),
-        F.percentile_approx(percentile_col, list(percentiles)).alias("approx_percentiles"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-def salted_group_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    sum_cols: Sequence[str],
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-stage skew-resistant aggregation for re-aggregatable measures:
-    stage 1 groups on (keys, random salt) spreading one hot key over
-    ``salt_buckets`` reducers; stage 2 merges the partials. Use when one key
-    dominates the distribution and AQE skew handling isn't enough.
-    """
-    clash = {"_salt", "_n"} & set(df.columns)
-    if clash:
-        raise ValueError(f"df columns collide with salting internals: {clash}")
-    salted = df.withColumn("_salt", (F.rand(seed=42) * salt_buckets).cast("int"))
-    partial = salted.groupBy(*keys, "_salt").agg(
-        *[F.sum(c).alias(c) for c in sum_cols],
-        F.count(F.lit(1)).alias("_n"),
-    )
-    return partial.groupBy(*keys).agg(
-        *[F.sum(c).alias(f"sum_{c}") for c in sum_cols],
-        F.sum("_n").alias("n_rows"),
     )
 
 

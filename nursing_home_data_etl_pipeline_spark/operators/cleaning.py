@@ -122,83 +122,6 @@ def cast_columns(df: DataFrame, casts: dict[str, str]) -> DataFrame:
     )
 
 
-def promote_types(
-    df: DataFrame,
-    candidates: tuple[str, ...] = ("bigint", "double", "date", "timestamp"),
-    null_token: str = "",
-) -> DataFrame:
-    """Post-hoc type promotion for untyped (all-string) staging tables.
-    Design notes: docs/DESIGN.md#cleaning-promote-types"""
-    string_cols = [f.name for f in df.schema.fields if f.dataType.typeName() == "string"]
-    if not string_cols:
-        return df
-    numeric = {"bigint", "double", "decimal", "int", "float"}
-    # The token rides as a BOUND LITERAL (F.lit), never interpolated into
-    # SQL text: string-splicing needed quote AND backslash escaping (Spark
-    # treats backslash as an escape in string literals), and any missed
-    # case corrupted the profiling predicate silently.
-    tok = F.lit(null_token)
-    aggs = []
-    for c in string_cols:
-        col = col_exact(c)
-        non_null = col.isNotNull() & (col != tok)
-        aggs.append(
-            F.sum(F.when(non_null, 1).otherwise(0)).alias(f"{c}__n")
-        )
-        # Leading-zero guard: "015009" (a CMS CCN) parses as 15009 but is an
-        # IDENTIFIER — numeric promotion would corrupt it. Any value with a
-        # leading zero — including sign-prefixed like "-03" — blocks
-        # numeric candidates for the column.
-        aggs.append(
-            F.sum(
-                F.when(non_null & col.rlike("^[+-]?0[0-9]"), 1).otherwise(0)
-            ).alias(f"{c}__lz")
-        )
-        for t in candidates:
-            ok = col.try_cast(t).isNotNull()
-            if t.split("(")[0] not in numeric:
-                # Spark parses '015009' as a DATE (year 15009); a pure-digit
-                # string is never a calendar value.
-                ok = ok & ~col.rlike("^[0-9]+$")
-            if t == "date":
-                # try_cast accepts '2023-01-05 10:30:00' (and '2023-01') AS
-                # date and TRUNCATES — promoting such columns to date
-                # destroys the time component. Only pure yyyy-MM-dd values
-                # qualify; datetime strings fall through to timestamp.
-                ok = ok & col.rlike("^[0-9]{4}-[0-9]{2}-[0-9]{2}$")
-            if t == "timestamp":
-                # Guard: try_cast FABRICATES the day for partial dates
-                # ('2023-01'); require a full y-m-d, optional time part
-                # (date -> midnight is the lossless MIXED-column widening).
-                ok = ok & col.rlike("^[0-9]{4}-[0-9]{2}-[0-9]{2}([ T].*)?$")
-            aggs.append(
-                F.sum(F.when(non_null & ok, 1).otherwise(0)).alias(f"{c}__{t}")
-            )
-    profile = df.agg(*aggs).collect()[0].asDict()
-    casts: dict[str, str] = {}
-    for c in string_cols:
-        n = profile[f"{c}__n"]
-        if not n:
-            continue
-        for t in candidates:
-            if t.split("(")[0] in numeric and profile[f"{c}__lz"]:
-                continue
-            if profile[f"{c}__{t}"] == n:
-                casts[c] = t
-                break
-    if not casts:
-        return df
-    # Plain cast (not try_cast) on the NULLIF'd column: profiling proved
-    # every remaining value parses, so a cast failure here means the input
-    # changed between profile and materialization — fail loudly.
-    def promote(c: str):
-        return F.nullif(col_exact(c), tok).cast(casts[c]).alias(c)
-
-    return df.select(
-        *[promote(c) if c in casts else col_exact(c).alias(c) for c in df.columns]
-    )
-
-
 def clean_table(
     df: DataFrame,
     rename_map: dict[str, str] | None = None,

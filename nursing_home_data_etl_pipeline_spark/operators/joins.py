@@ -56,11 +56,6 @@ def anti_join(df: DataFrame, other: DataFrame, on: str | Sequence[str]) -> DataF
     return df.join(other, on=on, how="left_anti")
 
 
-def semi_join(df: DataFrame, other: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """Rows of ``df`` with at least one match in ``other`` (EXISTS)."""
-    return df.join(other, on=on, how="left_semi")
-
-
 def merge_scd1(
     target: DataFrame,
     source: DataFrame,

@@ -4,9 +4,9 @@ runs Arrow-batched over ``mapInArrow`` — bytes never leave Arrow buffers.
 ``mapInArrow``, NOT ``mapInPandas`` (round-8, execution-confirmed): the
 pandas boundary turns one NULL doc_id into a float64 batch, corrupting
 ids above 2^53 and conflating NULL with NaN — Arrow int64 passes through
-exact. No image libs in this container: real codecs are import-gated
-stubs; a deterministic fake decoder exercises the full plumbing. Full
-notes: docs/DESIGN.md#multimodal-module."""
+exact. A deterministic fake decoder exercises the full plumbing; a real
+codec is the same mapInArrow shape. Full notes:
+docs/DESIGN.md#multimodal-module."""
 
 from __future__ import annotations
 
@@ -81,128 +81,3 @@ def decode_fake(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     return df.mapInArrow(decode, schema=DECODE_SCHEMA)
 
-
-#: Output schema of the real image decode — true dimensions + color mode.
-IMAGE_DECODE_SCHEMA = "doc_id long, n_bytes long, width int, height int, mode string"
-
-
-def decode_image(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
-    """Real image decode over the same mapInArrow plumbing as
-    :func:`decode_fake` — the ENVIRONMENT is the only gate: Pillow is not
-    in this container (verified by import), so the import check raises
-    NotImplementedError here, but the body is complete and runs wherever
-    Pillow is installed on the executors (covered by a skipif(no PIL)
-    test). Design notes: docs/DESIGN.md#multimodal-decode-image"""
-    try:
-        from PIL import Image
-    except ImportError as exc:
-        raise NotImplementedError(
-            "image decode requires Pillow on the executors; "
-            "use decode_fake() for plumbing tests"
-        ) from exc
-    import io
-
-    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids, payload_arr = _cols(batch, id_col, payload_col)
-            payload = payload_arr.to_pylist()
-            widths: list[int | None] = []
-            heights: list[int | None] = []
-            modes: list[str | None] = []
-            for b in payload:
-                if b is None:
-                    widths.append(None)
-                    heights.append(None)
-                    modes.append(None)
-                else:
-                    with Image.open(io.BytesIO(b)) as im:
-                        widths.append(im.width)
-                        heights.append(im.height)
-                        modes.append(im.mode)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.cast(pa.int64()),
-                    pa.array(
-                        [len(b) if b is not None else None for b in payload],
-                        pa.int64(),
-                    ),
-                    pa.array(widths, pa.int32()),
-                    pa.array(heights, pa.int32()),
-                    pa.array(modes, pa.string()),
-                ],
-                names=["doc_id", "n_bytes", "width", "height", "mode"],
-            )
-
-    return df.mapInArrow(decode, schema=IMAGE_DECODE_SCHEMA)
-
-
-def resize_fake(df: DataFrame, factor: int = 4) -> DataFrame:
-    """Resize analog — binary IN, binary OUT, metadata updated in the same
-    pass: keeps every ``factor``-th byte of the payload (a real image resize
-    is the same mapInArrow shape with ``PIL.Image.resize`` in the batch
-    loop). The binary->binary contract is the one that matters for chained
-    media pipelines (decode -> resize -> re-encode) — payload bytes stay in
-    Arrow buffers between stages, never materialized as Python row objects.
-    """
-    # Driver-side validation (same contract as packing's budget guard):
-    # factor=0 used to abort the job deep inside executor tasks with an
-    # opaque 'slice step cannot be zero', and a negative factor silently
-    # emitted reversed-byte payloads.
-    if factor <= 0:
-        raise ValueError(f"resize factor must be positive, got {factor}")
-
-    def resize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids, payload_arr = _cols(batch, "doc_id", "payload")
-            resized = [
-                b[::factor] if b is not None else None
-                for b in payload_arr.to_pylist()
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.cast(pa.int64()),
-                    pa.array(resized, pa.binary()),
-                    pa.array(
-                        [len(b) if b is not None else None for b in resized],
-                        pa.int64(),
-                    ),
-                ],
-                names=["doc_id", "payload", "n_bytes"],
-            )
-
-    return df.mapInArrow(
-        resize, schema="doc_id long, payload binary, n_bytes long"
-    )
-
-
-def sample_frames(df: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
-    """Frame-sampling STUB analog: real video frame sampling needs a codec;
-    the deterministic stand-in samples every Nth byte as a 'frame marker' —
-    same mapInArrow shape a real sampler uses."""
-    # Same driver-side guard as resize_fake: every_n_bytes=0 died in the
-    # executors with ZeroDivisionError after retries.
-    if every_n_bytes <= 0:
-        raise ValueError(
-            f"every_n_bytes must be positive, got {every_n_bytes}"
-        )
-
-    def sample(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids, payload_arr = _cols(batch, "doc_id", "payload")
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.cast(pa.int64()),
-                    pa.array(
-                        [
-                            len(b) // every_n_bytes if b is not None else None
-                            for b in payload_arr.to_pylist()
-                        ],
-                        pa.int64(),
-                    ),
-                ],
-                names=["doc_id", "n_frames"],
-            )
-
-    return df.mapInArrow(sample, schema="doc_id long, n_frames long")

@@ -22,17 +22,6 @@ def _hash_bucket(key: Column, salt: str) -> Column:
     )
 
 
-def deterministic_sample(
-    df: DataFrame, key_col: str, fraction: float, salt: str = "sample"
-) -> DataFrame:
-    """Keep ~fraction of rows, chosen by content hash of ``key_col`` —
-    reproducible across runs, partitionings, and engines."""
-    # round(), NOT int(): IEEE truncation loses a bucket for fractions
-    # like 0.57 (int(0.57 * 10000) == 5699), skewing every split/keep
-    # rate off its documented 1/10000 granularity.
-    return df.filter(_hash_bucket(F.col(key_col), salt) < round(fraction * 10000))
-
-
 def hash_split(
     df: DataFrame,
     key_col: str,

@@ -11,7 +11,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_prenorm_sql, dot_sql, norm_sql
@@ -198,219 +198,3 @@ def embedding_near_dup_pairs(
         .filter(F.col("cos_sim") >= threshold)
     )
 
-
-def kmeans_fit(
-    df: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Lloyd k-means over an embedding column — the trained coarse quantizer
-    for IVF ANN (vs. the training-free fixed cells in the catalog query).
-    Design notes: docs/DESIGN.md#similarity-kmeans-fit"""
-    # BATCHED farthest-point init: ONE sample job + driver numpy greedy
-    # selection at any k — docs/DESIGN.md#similarity-kmeans-fit.
-    n_cand = max(8 * k, 256)
-    # NULL embeddings/elements are excluded from TRAINING too (round-8
-    # hunt: init-only filtering force-assigned dirty rows to cell 0);
-    # zero vectors stay — valid L2 points.
-    clean = df.filter(
-        F.col(vec_col).isNotNull()
-        & ~F.exists(F.col(vec_col), lambda x: x.isNull())
-    )
-    # Candidate SEEDS also need a non-NULL id (position-encoding sort
-    # can't compare None, round-8 hunt); NULL-id vectors still train —
-    # the Lloyd sweep assigns cells row-locally without reading the id.
-    cand_rows = (
-        clean.filter(F.col(id_col).isNotNull())
-        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(n_cand)
-        .collect()
-    )
-    if not cand_rows:
-        raise ValueError("kmeans_fit: empty input")
-    # Sort candidates id-ascending so POSITION encodes the id tiebreak —
-    # argmax/argmin first-occurrence then break distance ties toward the
-    # lowest id with no numeric-id assumption (string/any orderable id
-    # works; the previous int() coercion crashed on string ids).
-    cand_rows.sort(key=lambda r: r["_id"])
-    # Dimensionality contract: the min-id candidate defines dim; ragged
-    # vectors of any OTHER length are excluded like NULL-element ones (in
-    # the sweep their zip_with distance NULLs to cell 0, and their extra
-    # posexplode positions would LENGTHEN cell centroids).
-    dim = len(cand_rows[0]["_v"])
-    cand_rows = [r for r in cand_rows if len(r["_v"]) == dim]
-    clean = clean.filter(F.size(F.col(vec_col)) == dim)
-    cand_vecs = np.array(
-        [[float(x) for x in r["_v"]] for r in cand_rows], dtype=np.float64
-    )
-    seed = 0  # lowest-id candidate
-    chosen = [seed]
-    min_d2 = ((cand_vecs - cand_vecs[seed]) ** 2).sum(axis=1)
-    while len(chosen) < min(k, len(cand_rows)):
-        min_d2[chosen] = -np.inf  # never re-pick a chosen candidate
-        # farthest first; ties on distance -> first position = lowest id
-        nxt = int(np.argmax(min_d2))
-        chosen.append(nxt)
-        min_d2 = np.minimum(min_d2, ((cand_vecs - cand_vecs[nxt]) ** 2).sum(axis=1))
-    cents = [[float(x) for x in cand_vecs[i]] for i in chosen]
-    while len(cents) < k:  # degenerate k > sample size: cycle the sample
-        cents.append(cents[len(cents) % len(chosen)])
-    for _ in range(iters):
-        choices = []
-        for c, vec in enumerate(cents):
-            cvec = F.array(*[F.lit(v) for v in vec])
-            d2 = F.aggregate(
-                F.zip_with(
-                    F.col(vec_col),
-                    cvec,
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            choices.append(F.struct(d2.alias("d2"), F.lit(c).alias("cell")))
-        assigned = clean.select(
-            F.col(vec_col).alias("_v"),
-            F.array_min(F.array(*choices))["cell"].alias("cell"),
-        )
-        sums = (
-            assigned.select("cell", F.posexplode("_v").alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(
-                F.sum(F.col("val").cast("double")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .groupBy("cell")
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("pos", (F.col("s") / F.col("n")).alias("m"))
-                    )
-                ).alias("dims")
-            )
-            .select("cell", F.col("dims.m").alias("cvec"))
-        )
-        got = {r["cell"]: [float(x) for x in r["cvec"]] for r in sums.collect()}
-        # empty cells keep their previous centroid (standard Lloyd handling)
-        cents = [got.get(c, cents[c]) for c in range(k)]
-    return cents
-
-
-def pq_train(
-    df: DataFrame,
-    dim: int,
-    m: int = 8,
-    k: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """Train product-quantization codebooks: split ``dim`` into ``m``
-    subspaces of dim/m and Lloyd-fit ``k`` centroids per subspace
-    (:func:`kmeans_fit` on array slices). Returns m codebooks of k sub-
-    centroids each — m*k*(dim/m) floats of driver-side constants. Design
-    notes: docs/DESIGN.md#similarity-pq-train"""
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    books = []
-    for s in range(m):
-        sliced = df.select(
-            F.col(id_col), F.slice(F.col(vec_col), s * sub + 1, sub).alias("_sv")
-        )
-        books.append(kmeans_fit(sliced, k=k, iters=iters, id_col=id_col, vec_col="_sv"))
-    return books
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "pq_code",
-) -> DataFrame:
-    """Encode vectors against trained codebooks: ``out_col`` is an array of
-    m codes, each the nearest sub-centroid (L2, ties to the lower code —
-    array_min over (d2, code) structs). Row-local; the codebooks travel as
-    literal constants, so encoding a 10^12-row corpus is a map-only pass.
-    """
-    sub = len(codebooks[0][0])
-    codes = []
-    for s, book in enumerate(codebooks):
-        sv = F.slice(F.col(vec_col), s * sub + 1, sub)
-        choices = []
-        for c, cent in enumerate(book):
-            cvec = F.array(*[F.lit(v) for v in cent])
-            d2 = F.aggregate(
-                F.zip_with(
-                    sv,
-                    cvec,
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            choices.append(F.struct(d2.alias("d2"), F.lit(c).alias("code")))
-        codes.append(F.array_min(F.array(*choices))["code"])
-    return df.select(F.col(id_col), F.array(*codes).alias(out_col))
-
-
-def pq_topk_adc(
-    queries: DataFrame,
-    corpus_codes: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """Approximate top-k by asymmetric distance (ADC): each query computes
-    its m x k lookup table of exact sub-distances to every sub-centroid
-    (row-local on the bounded query batch), then every (query, corpus)
-    pair's distance is just m array lookups + adds over the PQ codes —
-    never a dim-wide dot against the corpus. Design notes:
-    docs/DESIGN.md#similarity-pq-topk-adc"""
-    sub = len(codebooks[0][0])
-    luts = []
-    for s, book in enumerate(codebooks):
-        sv = F.slice(F.col(vec_col), s * sub + 1, sub)
-        cells = []
-        for cent in book:
-            cvec = F.array(*[F.lit(v) for v in cent])
-            cells.append(
-                F.aggregate(
-                    F.zip_with(
-                        sv,
-                        cvec,
-                        lambda a, b: (a.cast("double") - b)
-                        * (a.cast("double") - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
-        luts.append(F.array(*cells))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.array(*luts).alias("_lut")
-    )
-    c = corpus_codes.select(
-        F.col(id_col).alias("neighbor_id"), F.col(code_col).alias("_code")
-    )
-    pairs = c.join(F.broadcast(q), F.lit(True), "inner").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    adc: Column = F.lit(0.0)
-    for s in range(len(codebooks)):
-        adc = adc + F.element_at(
-            F.col("_lut").getItem(s), F.col("_code").getItem(s) + 1
-        )
-    scored = pairs.select(
-        "query_id", "neighbor_id", F.round(adc, 6).alias("adc_d2")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_d2"), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )

@@ -231,23 +231,6 @@ def running_sum_scaled(
             .withColumn(out_name, run).drop("_seg", "_loc", "_off"))
 
 
-def lag_scaled(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[str],
-    value_col: str,
-    out_name: str,
-    n_segments: int | None = None,
-    threshold_bytes: int = SEGMENT_THRESHOLD_BYTES,
-    segments: Column | None | object = _UNSET,
-) -> DataFrame:
-    """lag(1) with the two-level escape hatch — the single-spec form of
-    :func:`lags_scaled`."""
-    return lags_scaled(df, partition_by, order_by,
-                       [((), value_col, out_name)],
-                       n_segments, threshold_bytes, segments)
-
-
 def lags_scaled(
     df: DataFrame,
     partition_by: Sequence[str],
@@ -314,42 +297,3 @@ def lags_scaled(
                .drop("_lag", "_first", "_islast", "_prev"))
     return dfs.drop("_seg")
 
-
-def with_lag_delta(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-    value_col: str,
-    out_name: str = "delta",
-) -> DataFrame:
-    """value - lag(value) per group; first row of each group yields null."""
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return df.withColumn(_fresh(df, out_name, "with_lag_delta"),
-                         F.col(value_col) - F.lag(value_col, 1).over(w))
-
-
-def sessionize(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    gap_seconds: int,
-    tiebreak: Sequence[str] = (),
-    session_name: str = "session_id",
-) -> DataFrame:
-    """Batch sessionization: a new session starts when the gap to the
-    previous event exceeds ``gap_seconds``. session_id = cumulative count
-    of session starts per user (1-based). Streaming variant:
-    ``session_window`` (see streaming module). Design notes:
-    docs/DESIGN.md#windows-sessionize"""
-    order = [F.col(ts_col), *[F.col(c) for c in tiebreak]]
-    w = Window.partitionBy(user_col).orderBy(*order)
-    # Exact integer microsecond arithmetic — no float drift at the gap
-    # threshold regardless of timestamp magnitude.
-    us = F.unix_micros(F.col(ts_col))
-    gap = us - F.lag(us, 1).over(w)
-    is_start = F.when(gap.isNull() | (gap > gap_seconds * 1_000_000), 1).otherwise(0)
-    cum = Window.partitionBy(user_col).orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return df.withColumn(_fresh(df, session_name, "sessionize"),
-                         F.sum(is_start).over(cum).cast("long"))

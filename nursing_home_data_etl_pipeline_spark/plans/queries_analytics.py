@@ -334,8 +334,7 @@ def rollup_cube_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     # GROUP-COUNT-COMPARE rewrite (round-14 #7): ONE scan per table and
     # ONE key shuffle per branch where the literal chains scanned
-    # customer 4x / orders 3x — docs/CONTRACTS.md#set_ops_all; the
-    # operators/setops.py wrappers stay the API surface.
+    # customer 4x / orders 3x — docs/CONTRACTS.md#set_ops_all.
     from .catalog import tag_union
 
     cust = read_table(spark, sf_dir, "customer")

@@ -196,7 +196,7 @@ _BANDS = 4
 
 def _duck_shingles(src: str = "documents", prefix: str = "") -> str:
     """DuckDB shingle CTE (distinct word 5-grams of normalized text; whole
-    text when shorter than k) — mirrors functions.text.word_shingles
+    text when shorter than k) — mirrors operators.dedup.shingle_table
     exactly. ``src`` parameterizes the corpus relation so composed queries
     (e.g. training_corpus) can shingle a filtered CTE; ``prefix`` names
     the CTEs so one query can shingle two corpora (decontamination).

@@ -99,16 +99,12 @@ _DRAIN_DIRS: list[str] = []
 
 
 @atexit.register
-def _cleanup_drain_dirs() -> None:
-    for d in _DRAIN_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def cleanup_drains() -> None:
     """Free drain parquet EARLY: gates/bench call this once a streaming
     query's result is fully consumed (ADVICE r12 — a long session would
-    otherwise hold every drain's multi-million-row parquet at once);
-    atexit above stays as the backstop. Invalidates prior drain frames."""
+    otherwise hold every drain's multi-million-row parquet at once); the
+    atexit registration is the backstop for whatever is left at
+    interpreter exit. Invalidates prior drain frames."""
     while _DRAIN_DIRS:
         shutil.rmtree(_DRAIN_DIRS.pop(), ignore_errors=True)
 

@@ -135,20 +135,3 @@ def is_empty(df: DataFrame) -> bool:
     """
     return df.isEmpty()
 
-
-def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """JSON-lines reader (the interchange format most training corpora ship
-    as). Pass an explicit ``schema`` in production: without one Spark runs
-    a full inference scan BEFORE the real read — double I/O at 100 TB, and
-    a schema that drifts with whichever files happen to exist."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — vectorized, with the same predicate-pushdown / column-
-    pruning behavior as the parquet path (both go through Spark's columnar
-    batch reader)."""
-    return spark.read.orc(path)

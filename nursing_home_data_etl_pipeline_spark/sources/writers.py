@@ -14,27 +14,6 @@ import traceback
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def _writer(
-    df: DataFrame,
-    mode: str,
-    partition_by: Sequence[str] = (),
-    compression: str | None = None,
-    **options,
-):
-    """The shared sink-builder scaffolding: mode, optional partitioning,
-    optional compression, extra options — every format-specific sink below
-    is one line of format dispatch on top of this."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    if compression:
-        w = w.option("compression", compression)
-    for k, v in options.items():
-        w = w.option(k, v)
-    return w
 
 
 def write_parquet(
@@ -47,42 +26,13 @@ def write_parquet(
     lacks (SURVEY.md §4.3) — partitioned layout gives downstream readers
     partition pruning; AQE coalescing keeps file counts sane. Design
     notes: docs/DESIGN.md#writers-write-parquet"""
-    _writer(df, mode, partition_by).parquet(path)
+    w = df.write.mode(mode)
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(path)
 
 
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    sort_cols: Sequence[str],
-    mode: str = "overwrite",
-    partition_by: Sequence[str] = (),
-) -> None:
-    """Parquet sink with rows sorted WITHIN each output file: tightens
-    row-group min/max stats on ``sort_cols`` so range predicates skip row
-    groups (no global shuffle) — poor man's clustering for plain parquet.
-    Pair with repartition_by_range when cross-file pruning matters too."""
-    _writer(df.sortWithinPartitions(*sort_cols), mode, partition_by).parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 32,
-    sort_cols: Sequence[str] = (),
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table: later joins/aggs on the bucket key skip
-    their shuffle (both sides bucketed -> sort-merge reads buckets
-    pairwise) — the pre-shuffle paid once at write time; the core 100 TB
-    lever for repeated joins on a stable key (facility PK, doc_id)."""
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
-def replace_dir(df: DataFrame, target_path: str, meta: dict | None = None) -> None:
+def replace_dir(df: DataFrame, target_path: str) -> None:
     """Overwrite ``target_path`` with ``df`` when the plan READS the
     target (self-referential merge): stage, then swap via atomic Hadoop FS
     renames. On rename-less object stores this degrades to copy — front a
@@ -91,14 +41,6 @@ def replace_dir(df: DataFrame, target_path: str, meta: dict | None = None) -> No
     staging = target_path + "__staging"
     df.write.mode("overwrite").parquet(staging)
     jvm = spark._jvm
-    if meta is not None:
-        mpath = jvm.org.apache.hadoop.fs.Path(staging, "_meta.json")
-        mfs = mpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        mout = mfs.create(mpath, True)
-        try:
-            mout.write(bytearray(json.dumps(meta), "utf-8"))
-        finally:
-            mout.close()
     src = jvm.org.apache.hadoop.fs.Path(staging)
     dst = jvm.org.apache.hadoop.fs.Path(target_path)
     old = jvm.org.apache.hadoop.fs.Path(target_path + "__old")
@@ -145,25 +87,6 @@ def recover_dir(spark, target_path: str) -> bool:
     if not fs.rename(old, dst):
         raise IOError(f"recovery rename {target_path}__old -> {target_path} failed")
     return True
-
-
-def read_dir_meta(spark, path: str) -> dict | None:
-    """Read the ``_meta.json`` a :func:`replace_dir` ``meta=`` swap left in
-    ``path``; None when absent (no meta ever written, or pre-meta data).
-    Goes through the Hadoop FS API so it works on any scheme."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path, "_meta.json")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
-    stream = fs.open(jpath)
-    try:
-        # toByteArray, not toString: py4j cannot disambiguate toString's
-        # (InputStream, String) overload and the call fails at dispatch.
-        raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    return json.loads(raw.decode("utf-8"))
 
 
 def write_error(
@@ -215,89 +138,3 @@ def write_error(
             diag["quarantine_traceback"] = "".join(traceback.format_exception(exc2))
             put_diagnostics()
 
-
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] = (),
-    compression: str | None = "gzip",
-) -> None:
-    """JSON-lines sink — the corpus hand-off format for tokenizer/training
-    jobs; gzip by default (JSONL is ~5-10x parquet), ``compression=None``
-    for plain text. Types survive only as JSON types — parquet stays the
-    system of record; this is an export format."""
-    _writer(df, mode, partition_by, compression).json(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] = (),
-    compression: str = "zstd",
-) -> None:
-    """ORC sink — the other columnar format large warehouses standardize on
-    (Hive/Trino ecosystems). Same pruning/pushdown story as parquet in
-    Spark's vectorized reader; zstd by default (better ratio than the zlib
-    ORC default at similar speed)."""
-    _writer(df, mode, partition_by, compression).orc(path)
-
-
-def write_csv(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    header: bool = True,
-    compression: str | None = None,
-) -> None:
-    """CSV sink, mirroring the reference's CSV *ingest* dialect (header row,
-    everything stringly — nh-etl-universal-cleaning.py:75) so a
-    write_csv -> read_csv_untyped round-trip is the identity on string
-    frames. Export format only: no types, no stats, no pruning."""
-    _writer(df, mode, compression=compression, header=header).csv(path)
-
-
-def write_avro(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] = (),
-) -> None:
-    """Avro sink — row-oriented interchange format for streaming/Kafka
-    ecosystems. Requires the ``spark-avro`` package on the classpath (an
-    external module, not bundled with Spark); raises a clear error when it
-    is absent instead of a py4j stack."""
-    try:
-        _writer(df, mode, partition_by).format("avro").save(path)
-    except Exception as ex:  # AnalysisException: failed to find data source
-        if "avro" in str(ex).lower() and "find" in str(ex).lower():
-            raise NotImplementedError(
-                "spark-avro is not on the classpath; add the external "
-                "org.apache.spark:spark-avro package to enable this sink"
-            ) from ex
-        raise
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: Sequence[str],
-    n_files: int,
-    mode: str = "overwrite",
-) -> None:
-    """Parquet sink clustered by a Morton (Z-order) key over
-    ``zorder_cols``: range-partition on the interleaved key, sort within
-    files, drop the key. Filters on ANY z-ordered column then skip
-    files/row-groups (:func:`write_sorted` only does its leading column).
-    Cost: one range shuffle at write time."""
-    from ..operators.partitioning import zorder_key
-
-    keyed = zorder_key(df, zorder_cols)
-    (
-        keyed.repartitionByRange(n_files, F.col("_zorder"))
-        .sortWithinPartitions("_zorder")
-        .drop("_zorder")
-        .write.mode(mode)
-        .parquet(path)
-    )

@@ -63,9 +63,7 @@ def session_counts(
     key_col: str = "user_id",
 ) -> DataFrame:
     """Session-window aggregation: sessions close after ``gap`` inactivity.
-    The streaming twin of the batch lag+cumsum sessionization (operators/
-    windows.sessionize) — same (user, session) event counts, with session
-    identity carried by the window start instead of a per-user ordinal.
+    Session identity is carried by the window start.
     Design notes: docs/DESIGN.md#aggregations-session-counts"""
     return (
         (events.withWatermark(ts_col, watermark)
@@ -120,8 +118,8 @@ def _accumulate(
     key_col: str,
     value_col: str,
 ) -> pd.DataFrame:
-    """Shared accumulation body for both stateful variants — one site for the
-    count/total/rounding logic so the TTL twin can't drift. Design notes:
+    """Accumulation body of :func:`running_totals_stateful`: the
+    count/total/rounding logic for one key's micro-batch. Design notes:
     docs/DESIGN.md#aggregations--accumulate"""
     if state.exists:
         n, micro, has_val, has_nan, has_pinf, has_ninf = state.get
@@ -175,17 +173,25 @@ def _accumulate(
     )
 
 
-def _stateful_totals(
-    events: DataFrame, key_col: str, value_col: str, update, timeout
+def running_totals_stateful(
+    events: DataFrame, key_col: str = "user_id", value_col: str = "value"
 ) -> DataFrame:
-    """Shared applyInPandasWithState plumbing for the running-totals
-    variants. The _vnull column is the NULL-vs-NaN flag for SQL SUM
-    semantics (see _accumulate), and the frame is pruned to exactly the
-    columns the accumulator reads BEFORE it crosses the Arrow boundary:
-    pandas timestamps are int64 NANOSECONDS, so an unused ts column with a
-    year outside 1677-2262 would abort the worker (pyarrow out-of-bounds
-    cast) even though the operator never touches it — and less Arrow
-    transfer is free speed."""
+    """Custom stateful operator (applyInPandasWithState): per-key running
+    event count + value total, emitted each trigger. The canonical shape
+    for operators Spark's windowing can't express (per-key accumulators,
+    custom eviction): Arrow-batched state updates, bounded per-key state.
+
+    The _vnull column is the NULL-vs-NaN flag for SQL SUM semantics (see
+    _accumulate), and the frame is pruned to exactly the columns the
+    accumulator reads BEFORE it crosses the Arrow boundary: pandas
+    timestamps are int64 NANOSECONDS, so an unused ts column with a year
+    outside 1677-2262 would abort the worker (pyarrow out-of-bounds cast)
+    even though the operator never touches it — and less Arrow transfer is
+    free speed."""
+
+    def update(key, pdfs, state):
+        yield _accumulate(key, pdfs, state, key_col, value_col)
+
     events = events.withColumn("_vnull", F.col(value_col).isNull()).select(
         key_col, value_col, "_vnull"
     )
@@ -194,49 +200,5 @@ def _stateful_totals(
         outputStructType=_running_totals_schema(events, key_col),
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=timeout,
-    )
-
-
-def running_totals_stateful(
-    events: DataFrame, key_col: str = "user_id", value_col: str = "value"
-) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState): per-key running
-    event count + value total, emitted each trigger. The canonical shape
-    for operators Spark's windowing can't express (per-key accumulators,
-    custom eviction): Arrow-batched state updates, bounded per-key state."""
-
-    def update(key, pdfs, state):
-        yield _accumulate(key, pdfs, state, key_col, value_col)
-
-    return _stateful_totals(
-        events, key_col, value_col, update, GroupStateTimeout.NoTimeout
-    )
-
-
-_TTL_MS = 6 * 3600 * 1000
-
-
-def running_totals_stateful_ttl(
-    events: DataFrame, key_col: str = "user_id", value_col: str = "value"
-) -> DataFrame:
-    """:func:`running_totals_stateful` with state EVICTION: keys idle for
-    the TTL are dropped on the next trigger (ProcessingTimeTimeout). On an
-    unbounded stream the NoTimeout variant's state grows with ever-seen key
-    cardinality — this is the knob that keeps per-executor state bounded by
-    the active working set, the same role the watermark plays for windowed
-    aggregation state."""
-
-    def update(key, pdfs, state):
-        if state.hasTimedOut:
-            # idle key: emit nothing, drop the accumulator — state stays
-            # bounded by ACTIVE keys, not ever-seen keys.
-            state.remove()
-            return
-        out = _accumulate(key, pdfs, state, key_col, value_col)
-        state.setTimeoutDuration(_TTL_MS)
-        yield out
-
-    return _stateful_totals(
-        events, key_col, value_col, update, GroupStateTimeout.ProcessingTimeTimeout
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

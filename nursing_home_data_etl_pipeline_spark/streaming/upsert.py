@@ -5,8 +5,6 @@ ledger, one merge implementation for both paths."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
@@ -14,20 +12,7 @@ from pyspark.sql import functions as F
 
 from ..operators.joins import latest_per_key, merge_scd1
 from ..sources.readers import path_exists, read_parquet
-from ..sources.writers import read_dir_meta, recover_dir, replace_dir
-
-
-def _start_foreach_batch(stream, merge_batch, checkpoint_dir, available_now):
-    """Shared writer construction for both foreachBatch sinks — one place
-    for the checkpoint/output-mode/trigger wiring."""
-    w = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+from ..sources.writers import recover_dir, replace_dir
 
 
 def start_upsert_sink(
@@ -76,98 +61,12 @@ def start_upsert_sink(
             result = source  # first batch bootstraps the dim
         replace_dir(result, target_path)
 
-    return _start_foreach_batch(stream, merge_batch, checkpoint_dir, available_now)
+    w = (
+        stream.writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        w = w.trigger(availableNow=True)
+    return w.start()
 
-
-def start_incremental_agg(
-    stream: DataFrame,
-    target_path: str,
-    keys: list[str],
-    value_col: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Incrementally maintain per-key aggregates (count/sum/min/max — the
-    distributive set; avg derives as sum/count) in a Parquet table,
-    merging each micro-batch's PARTIAL aggregate into the stored state.
-    Design notes: docs/DESIGN.md#upsert-start-incremental-agg"""
-    spark = stream.sparkSession
-
-    def agg_exprs(df: DataFrame) -> DataFrame:
-        return df.groupBy(*keys).agg(
-            F.count(value_col).alias("cnt"),
-            F.sum(value_col).alias("total"),
-            F.min(value_col).alias("vmin"),
-            F.max(value_col).alias("vmax"),
-        )
-
-    # Lineage identity: local paths canonicalize via realpath on BOTH
-    # sides (stamp + compare) so respellings of one dir resume cleanly
-    # and different dirs fail loudly; URIs compare verbatim —
-    # docs/DESIGN.md#upsert-start-incremental-agg.
-    def _ckpt_id(p: str | None) -> str | None:
-        if p is None or "://" in p:
-            return p
-        return os.path.realpath(p)
-
-    ckpt_id = _ckpt_id(checkpoint_dir)
-
-    def _stored_ckpt_id(stored: str | None) -> str | None:
-        # A RELATIVE stored stamp (possible only from a pre-resolution
-        # version) is ambiguous — resolving it against THIS process's cwd
-        # could false-match a genuinely different checkpoint and silently
-        # skip its first epochs. Ambiguity fails loud instead.
-        if stored is not None and "://" not in stored and not os.path.isabs(stored):
-            raise ValueError(
-                f"target {target_path!r} carries an ambiguous relative "
-                f"checkpoint stamp {stored!r} (written by an older version); "
-                "rewrite _meta.json with the absolute checkpoint path (or "
-                "rebuild the target) before resuming"
-            )
-        return _ckpt_id(stored)
-
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        recover_dir(spark, target_path)
-        meta = read_dir_meta(spark, target_path)
-        if meta is not None and _stored_ckpt_id(meta.get("checkpoint")) not in (
-            None,
-            ckpt_id,
-        ):
-            # A fresh checkpoint restarts epochs at 0, so the bare-number
-            # guard would silently skip its first batches: a lineage change
-            # must be an explicit migration. (Meta without a checkpoint key
-            # = pre-stamp target: accepted, stamped on next swap.)
-            raise ValueError(
-                f"target {target_path!r} was maintained from checkpoint "
-                f"{meta.get('checkpoint')!r}, not {ckpt_id!r}; "
-                "re-pointing an aggregate target at a new checkpoint "
-                "requires rebuilding the target (or removing it) explicitly"
-            )
-        if meta is not None and meta.get("epoch", -1) >= epoch_id:
-            return  # replayed, already applied — merging again double-counts
-        partial = agg_exprs(batch)
-        # Same bootstrap-only-when-absent rule as start_upsert_sink: merge
-        # errors must fail the query so the checkpoint replays the batch.
-        if path_exists(spark, target_path):
-            target = read_parquet(spark, target_path)
-            merged = (
-                target.unionByName(partial)
-                .groupBy(*keys)
-                .agg(
-                    F.sum("cnt").alias("cnt"),
-                    F.sum("total").alias("total"),
-                    F.min("vmin").alias("vmin"),
-                    F.max("vmax").alias("vmax"),
-                )
-            )
-        else:
-            merged = partial
-        replace_dir(
-            merged,
-            target_path,
-            meta={"epoch": epoch_id, "checkpoint": ckpt_id},
-        )
-
-    return _start_foreach_batch(stream, merge_batch, checkpoint_dir, available_now)

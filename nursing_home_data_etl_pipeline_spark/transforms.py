@@ -129,8 +129,8 @@ def universal_cleaning(
                 raise ValueError(
                     f"source domain {domain!r} carries a column {clash} that "
                     f"collides with the engine's recency stamp {RECENCY_COL!r}; "
-                    "rename it upstream (a write_csv round-trip re-landing its "
-                    "own stamp must not silently lose the source values)"
+                    "rename it upstream (a CSV export re-landing its own "
+                    "stamp must not silently lose the source values)"
                 )
             df = df.withColumn(
                 RECENCY_COL, F.col("_metadata.file_modification_time")

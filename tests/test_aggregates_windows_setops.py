@@ -3,26 +3,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nursing_home_data_etl_pipeline_spark.operators.aggregates import (
-    approx_stats,
     cube_agg,
     pivot_agg,
     rollup_agg,
-    salted_group_agg,
     unpivot_stack,
 )
-from nursing_home_data_etl_pipeline_spark.operators.setops import (
-    except_,
-    except_all,
-    intersect,
-    intersect_all,
-    union_all,
-    union_distinct,
-)
 from nursing_home_data_etl_pipeline_spark.operators.windows import (
-    sessionize,
     top_k_global,
     top_k_per_group,
-    with_lag_delta,
 )
 
 
@@ -52,26 +40,6 @@ def test_unpivot_roundtrip(spark):
     assert {(r.metric, r.value) for r in out} == {("m1", 2.0), ("m2", 3.0)}
 
 
-def test_approx_stats_accuracy(spark):
-    df = spark.range(1000).select(
-        F.lit("g").alias("g"),
-        F.col("id").alias("u"),
-        (F.col("id") * 1.0).alias("v"),
-    )
-    row = approx_stats(df, ["g"], "u", "v").collect()[0]
-    assert abs(row.approx_distinct - 1000) / 1000 < 0.1
-    assert abs(row.approx_percentiles[0] - 500.0) < 50
-
-
-def test_salted_group_agg_matches_plain(spark):
-    df = spark.createDataFrame(
-        [("k", float(i)) for i in range(100)] + [("j", 1.0)], ["k", "v"]
-    )
-    out = {r.k: (r.sum_v, r.n_rows) for r in salted_group_agg(df, ["k"], ["v"]).collect()}
-    assert out["k"] == (sum(range(100)), 100)
-    assert out["j"] == (1.0, 1)
-
-
 def test_topk_per_group_deterministic_ties(spark):
     df = spark.createDataFrame(
         [("g", 1, 5.0), ("g", 2, 5.0), ("g", 3, 5.0)], ["g", "id", "v"]
@@ -86,52 +54,6 @@ def test_topk_global(spark):
     df = spark.range(100).select(F.col("id"), (F.col("id") % 7).alias("v"))
     out = top_k_global(df, [F.col("v").desc(), F.col("id")], k=3).collect()
     assert [r.id for r in out] == [6, 13, 20]
-
-
-def test_lag_delta_first_null(spark):
-    df = spark.createDataFrame([("u", 1, 10.0), ("u", 2, 13.0)], ["u", "i", "v"])
-    out = {r.i: r.delta for r in with_lag_delta(df, ["u"], [F.col("i")], "v").collect()}
-    assert out[1] is None and out[2] == 3.0
-
-
-def test_sessionize_gap_boundary(spark):
-    # events at t=0, t=gap (no new session: gap not > gap), t=gap*2+1 (new)
-    rows = [(1, 0), (1, 1800), (1, 3601 + 1800)]
-    df = spark.createDataFrame(rows, ["user_id", "sec"]).select(
-        "user_id", F.timestamp_seconds("sec").alias("ts")
-    )
-    out = sessionize(df, "user_id", "ts", gap_seconds=1800)
-    ids = [r.session_id for r in out.orderBy("ts").collect()]
-    assert ids == [1, 1, 2]
-
-
-def test_sessionize_null_ts_rows_are_singleton_sessions(spark):
-    """NULL-ts events sort first and each opens its own session; real-time
-    events continue numbering after them (documented semantics)."""
-    rows = [(1, 1, None), (2, 1, None), (3, 1, 100), (4, 1, 120)]
-    df = spark.createDataFrame(rows, "event_id long, user_id long, sec long").select(
-        "event_id", "user_id", F.timestamp_seconds("sec").alias("ts")
-    )
-    out = {
-        r.event_id: r.session_id
-        for r in sessionize(
-            df, "user_id", "ts", gap_seconds=30, tiebreak=("event_id",)
-        ).collect()
-    }
-    # two singleton NULL sessions, then one real session of two events
-    assert out[1] == 1 and out[2] == 2
-    assert out[3] == 3 and out[4] == 3
-
-
-def test_set_ops(spark):
-    a = spark.createDataFrame([(1,), (1,), (2,)], ["k"])
-    b = spark.createDataFrame([(2,), (3,)], ["k"])
-    assert union_all(a, b).count() == 5
-    assert union_distinct(a, b).count() == 3
-    assert {r.k for r in intersect(a, b).collect()} == {2}
-    assert intersect_all(a, b).count() == 1
-    assert {r.k for r in except_(a, b).collect()} == {1}
-    assert except_all(a, b).count() == 2
 
 
 def test_running_agg_ties_share_the_range_sum(spark):
@@ -162,23 +84,15 @@ def test_window_helpers_raise_on_output_column_collision(spark):
 
     from nursing_home_data_etl_pipeline_spark.operators.windows import (
         running_agg,
-        sessionize,
         top_k_per_group,
-        with_lag_delta,
     )
 
     df = spark.createDataFrame(
-        [(1, 1.0, "2024-01-01 00:00:00", 7, 0.0, 0, 9)],
-        "k int, v double, ts string, rank int, running double, delta int, session_id int",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
+        [(1, 1.0, 7, 0.0)], "k int, v double, rank int, running double")
     with pytest.raises(ValueError, match="'rank' already exists"):
         top_k_per_group(df, ["k"], [F.col("v")], k=1)
     with pytest.raises(ValueError, match="'running' already exists"):
         running_agg(df, ["k"], [F.col("v")], "v")
-    with pytest.raises(ValueError, match="'delta' already exists"):
-        with_lag_delta(df, ["k"], [F.col("v")], "v")
-    with pytest.raises(ValueError, match="'session_id' already exists"):
-        sessionize(df, "k", "ts", 60)
 
 
 def test_segmented_windows_match_flat_on_edge_data(spark):
@@ -190,7 +104,7 @@ def test_segmented_windows_match_flat_on_edge_data(spark):
     from pyspark.sql import Window
 
     from nursing_home_data_etl_pipeline_spark.operators.windows import (
-        lag_scaled,
+        lags_scaled,
         running_agg,
         running_sum_scaled,
     )
@@ -210,8 +124,8 @@ def test_segmented_windows_match_flat_on_edge_data(spark):
         map(key, flat.collect()), key=str)
 
     uniq = df.filter(F.col("id") != 1003)  # lag needs a total order
-    seg_lag = lag_scaled(uniq, ["k"], ["o", "id"], "v", "lg",
-                         threshold_bytes=0, n_segments=5)
+    seg_lag = lags_scaled(uniq, ["k"], ["o", "id"], [((), "v", "lg")],
+                          threshold_bytes=0, n_segments=5)
     w = Window.partitionBy("k").orderBy("o", "id")
     flat_lag = uniq.withColumn("lg", F.lag("v", 1).over(w))
     key2 = lambda r: (r.k, r.o, r.id, r.v, r.lg)  # noqa: E731
@@ -306,7 +220,7 @@ def test_hot_share_gating_switch_boundary(spark):
         _estimated_size_bytes,
     )
     from nursing_home_data_etl_pipeline_spark.operators.windows import (
-        lag_scaled,
+        lags_scaled,
         plan_segments,
     )
 
@@ -321,8 +235,8 @@ def test_hot_share_gating_switch_boundary(spark):
     seg_col = plan_segments(hot, ["o"], ["k"], threshold_bytes=thr)
     assert seg_col is not None
 
-    got = lag_scaled(hot, ["k"], ["o"], "v", "lg", threshold_bytes=thr,
-                     n_segments=5)
+    got = lags_scaled(hot, ["k"], ["o"], [((), "v", "lg")],
+                      threshold_bytes=thr, n_segments=5)
     flat = hot.withColumn("lg", F.lag("v", 1).over(
         Window.partitionBy("k").orderBy("o")))
     key = lambda r: (r.k, r.o, r.v, r.lg)  # noqa: E731

@@ -72,82 +72,6 @@ def test_clean_table_end_to_end(spark):
     assert row.facility_number == "007" and row.facility_name == "Sunny Acres"
 
 
-def test_promote_types_keeps_datetime_strings_as_timestamp(spark):
-    """try_cast('2023-01-05 10:30:00' AS date) succeeds and TRUNCATES the
-    time — such columns must promote to timestamp, not date."""
-    from nursing_home_data_etl_pipeline_spark.operators.cleaning import promote_types
-
-    df = spark.createDataFrame(
-        [("2023-01-05 10:30:00", "2023-01-05"), ("2024-02-06 11:00:01", "2024-02-06")],
-        ["dt", "d"],
-    )
-    out = promote_types(df)
-    types = dict(out.dtypes)
-    assert types["dt"] == "timestamp"
-    assert types["d"] == "date"
-    assert out.filter("hour(dt) = 10").count() == 1  # time survived
-
-
-def test_promote_types_null_token_values_become_null(spark):
-    """Values equal to null_token are excluded from profiling, so they MUST
-    be nulled before the promoted cast — under ANSI, leaving '' in a
-    promoted bigint column threw CAST_INVALID_INPUT at materialization.
-    Also covers a quote-bearing token (must act as a literal, not break
-    the profiling SQL)."""
-    from nursing_home_data_etl_pipeline_spark.operators.cleaning import promote_types
-
-    df = spark.createDataFrame([("1",), ("",), ("2",)], ["n"])
-    out = promote_types(df)  # default null_token=""
-    assert dict(out.dtypes)["n"] == "bigint"
-    assert sorted(r.n for r in out.collect() if r.n is not None) == [1, 2]
-    assert out.filter("n IS NULL").count() == 1
-
-    quoted = spark.createDataFrame([("1",), ("n'a",), ("2",)], ["n"])
-    out2 = promote_types(quoted, null_token="n'a")
-    assert dict(out2.dtypes)["n"] == "bigint"
-    assert out2.filter("n IS NULL").count() == 1
-
-    # backslash-bearing token: must act as a literal (string-spliced SQL
-    # treated it as an escape and broke the profiling expression)
-    slashed = spark.createDataFrame([("1",), ("\\",), ("\\N",), ("2",)], ["n"])
-    out3 = promote_types(slashed, null_token="\\")
-    assert dict(out3.dtypes)["n"] == "string"  # "\\N" still blocks promotion
-    out4 = promote_types(slashed.filter("n != '\\\\N'"), null_token="\\")
-    assert dict(out4.dtypes)["n"] == "bigint"
-    assert out4.filter("n IS NULL").count() == 1
-
-
-def test_promote_types_sign_prefixed_leading_zero_blocked(spark):
-    """'-03' parses as -3 — the same leading-zero identifier destruction
-    the guard exists for, reachable via a sign prefix before the fix."""
-    from nursing_home_data_etl_pipeline_spark.operators.cleaning import promote_types
-
-    df = spark.createDataFrame([("-03",), ("-7",)], ["n"])
-    assert dict(promote_types(df).dtypes)["n"] == "string"
-    ok = spark.createDataFrame([("-3",), ("-7",), ("+2",)], ["n"])
-    assert dict(promote_types(ok).dtypes)["n"] == "bigint"
-
-
-def test_promote_types_partial_dates_stay_strings(spark):
-    """try_cast('2023-01' AS timestamp) fabricates day/time — a
-    month-identifier column must stay a string (the date branch had this
-    guard; the timestamp branch lacked it). Full-date values still promote:
-    a MIXED date/datetime column widens to timestamp (date -> midnight is
-    the standard lossless widening), including single-digit-hour times."""
-    from nursing_home_data_etl_pipeline_spark.operators.cleaning import promote_types
-
-    df = spark.createDataFrame([("2023-01",), ("2023-02",)], ["month"])
-    assert dict(promote_types(df).dtypes)["month"] == "string"
-
-    mixed = spark.createDataFrame(
-        [("2023-01-02",), ("2023-01-02 10:30:00",), ("2023-01-03 3:04:05",)],
-        ["dt"],
-    )
-    out = promote_types(mixed)
-    assert dict(out.dtypes)["dt"] == "timestamp"
-    assert out.filter("hour(dt) = 3").count() == 1  # single-digit hour kept
-
-
 def test_cast_columns_absent_key_raises(spark):
     import pytest
 

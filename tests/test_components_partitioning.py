@@ -7,13 +7,6 @@ from nursing_home_data_etl_pipeline_spark.operators.components import (
     connected_components,
     dup_clusters,
 )
-from nursing_home_data_etl_pipeline_spark.operators.partitioning import (
-    coalesce_output,
-    partition_count,
-    repartition_by_range,
-    repartition_for_join,
-    with_salt,
-)
 
 
 def test_connected_components_basic(spark):
@@ -71,17 +64,6 @@ def test_distributed_path_matches_union_find(spark):
     }
     assert fast == dist
     assert fast[8] == 8  # isolated vertex labels itself on both paths
-
-
-def test_partitioning_helpers(spark):
-    df = spark.range(1000)
-    assert partition_count(repartition_for_join(df, ["id"], 7)) == 7
-    assert partition_count(coalesce_output(df.repartition(16), 3)) == 3
-    ranged = repartition_by_range(df, ["id"], 4)
-    assert partition_count(ranged) <= 4
-    salted = with_salt(df, buckets=8)
-    vals = {r._salt for r in salted.select("_salt").distinct().collect()}
-    assert vals <= set(range(8)) and len(vals) > 1
 
 
 def test_absent_endpoint_conducts_in_both_paths(spark):

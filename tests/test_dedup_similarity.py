@@ -14,8 +14,6 @@ from nursing_home_data_etl_pipeline_spark.operators.dedup import (
 )
 from nursing_home_data_etl_pipeline_spark.operators.multimodal import (
     decode_fake,
-    resize_fake,
-    sample_frames,
     with_binary_payload,
 )
 from nursing_home_data_etl_pipeline_spark.operators.similarity import (
@@ -207,11 +205,6 @@ def test_multimodal_plumbing(spark):
     assert row.n_bytes == 11
     assert row.header_hex == "hello wo".encode().hex()
     assert row.fake_height == ord("h")
-    fr = sample_frames(mm, every_n_bytes=4).collect()[0]
-    assert fr.n_frames == 2
-    rz = resize_fake(mm, factor=4).collect()[0]
-    assert bytes(rz.payload) == b"hello world"[::4]
-    assert rz.n_bytes == 3  # binary in -> binary out, metadata refreshed
 
 
 def test_multimodal_null_payload_propagates(spark):
@@ -225,80 +218,6 @@ def test_multimodal_null_payload_propagates(spark):
     assert dec[2].n_bytes is None and dec[2].header_hex is None
     assert dec[2].fake_width is None and dec[2].fake_height is None
     assert dec[3].n_bytes == 0 and dec[3].header_hex == ""
-    rz = {r.doc_id: r for r in resize_fake(mm, factor=2).collect()}
-    assert rz[2].payload is None and rz[2].n_bytes is None
-    assert bytes(rz[3].payload) == b"" and rz[3].n_bytes == 0
-    fr = {r.doc_id: r for r in sample_frames(mm).collect()}
-    assert fr[2].n_frames is None and fr[3].n_frames == 0
-    assert fr[1].n_frames == 0
-
-
-def _stdlib_png(w: int, h: int, rgb=(200, 10, 30)) -> bytes:
-    """A valid 8-bit RGB PNG built with stdlib only (zlib + struct + CRC32)
-    — the decode fixture must not itself depend on Pillow, or the real
-    branch could never be exercised by installing Pillow alone."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        body = tag + data
-        return (
-            struct.pack(">I", len(data))
-            + body
-            + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # 8-bit, color type 2
-    raw = b"".join(b"\x00" + bytes(rgb) * w for _ in range(h))  # filter 0 rows
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_stdlib_png_fixture_is_wellformed():
-    """Self-check of the vendored PNG bytes: signature, IHDR-encoded
-    dimensions, and IDAT payload decompressing to the filtered-scanline
-    size — so a broken fixture can't masquerade as a Pillow decode bug."""
-    import struct
-    import zlib
-
-    b = _stdlib_png(4, 3)
-    assert b[:8] == b"\x89PNG\r\n\x1a\n"
-    assert b[12:16] == b"IHDR" and struct.unpack(">II", b[16:24]) == (4, 3)
-    idat_at = b.index(b"IDAT")
-    (idat_len,) = struct.unpack(">I", b[idat_at - 4 : idat_at])
-    raw = zlib.decompress(b[idat_at + 4 : idat_at + 4 + idat_len])
-    assert len(raw) == 3 * (1 + 4 * 3)  # h rows of (filter byte + w*3)
-
-
-def test_decode_image_env_gate_or_real_decode(spark):
-    """decode_image's ONLY gate is the environment: without Pillow it
-    raises NotImplementedError at plan-build time (not deep in a task);
-    with Pillow it must actually decode — real dimensions, mode, and the
-    same NULL-payload contract as decode_fake. RECIPE (this container
-    cannot pip install): ``pip install pillow`` then re-run this test —
-    the fixture PNG is stdlib-generated, so Pillow is needed only for the
-    decode itself and the real branch runs with no other setup."""
-    import pytest
-
-    from nursing_home_data_etl_pipeline_spark.operators.multimodal import decode_image
-
-    df = spark.createDataFrame(
-        [(1, _stdlib_png(4, 3)), (2, None)], "doc_id long, payload binary"
-    )
-    try:
-        import PIL  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="Pillow"):
-            decode_image(df)
-        return
-    got = {r.doc_id: r for r in decode_image(df).collect()}
-    assert (got[1].width, got[1].height, got[1].mode) == (4, 3, "RGB")
-    assert got[1].n_bytes == len(_stdlib_png(4, 3))
-    assert got[2].width is None and got[2].n_bytes is None
 
 
 def test_rhp_derived_planes_bound_bucket_occupancy():
@@ -403,143 +322,6 @@ def test_minhash_double_hash_matches_duckdb_oracle_arithmetic(spark):
     assert got == want
 
 
-def test_kmeans_fit_recovers_separated_clusters(spark):
-    from nursing_home_data_etl_pipeline_spark.operators.similarity import kmeans_fit
-
-    # two tight clusters in 4-d around (0,0,0,0) and (10,10,10,10); the
-    # duplicate vectors in each cluster must each weigh into the mean
-    rows = []
-    for i in range(30):
-        base = 0.0 if i % 2 == 0 else 10.0
-        rows.append((i, [base + (i % 5) * 0.1] * 4))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = kmeans_fit(df, k=2, iters=4, vec_col="embedding")
-    assert len(cents) == 2 and all(len(c) == 4 for c in cents)
-    lo = min(cents, key=lambda c: c[0])
-    hi = max(cents, key=lambda c: c[0])
-    assert abs(lo[0] - 0.2) < 0.05  # mean of 0.0,0.1,...,0.4
-    assert abs(hi[0] - 10.2) < 0.05
-    # deterministic: same input -> identical floats
-    assert cents == kmeans_fit(df, k=2, iters=4, vec_col="embedding")
-
-
-def test_kmeans_fit_accepts_string_ids(spark):
-    """The id column is only an ordering/tiebreak key — string ids must
-    work (the init's int() coercion crashed on them before the fix) and
-    give the same centroids as the equivalent integer-id frame."""
-    from nursing_home_data_etl_pipeline_spark.operators.similarity import kmeans_fit
-
-    rows = []
-    for i in range(30):
-        base = 0.0 if i % 2 == 0 else 10.0
-        rows.append((i, [base + (i % 5) * 0.1] * 4))
-    ints = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    # zero-padded so string sort order == numeric sort order
-    strs = spark.createDataFrame(
-        [(f"doc-{i:04d}", v) for i, v in rows],
-        "vec_id string, embedding array<float>",
-    )
-    assert kmeans_fit(strs, k=2, iters=4, vec_col="embedding") == kmeans_fit(
-        ints, k=2, iters=4, vec_col="embedding"
-    )
-
-
-def test_kmeans_job_count_independent_of_k(spark):
-    """Init is one sampled job at any k: a k=64 fit must launch the same
-    number of Spark jobs as a k=8 fit (the pre-round-6 serial farthest-point
-    init launched one job PER centroid — 63 extra jobs at k=64)."""
-    import random
-    import uuid
-
-    from nursing_home_data_etl_pipeline_spark.operators.similarity import kmeans_fit
-
-    rng = random.Random(3)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(1000)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
-    df.count()
-
-    def n_jobs(k: int) -> int:
-        sc = spark.sparkContext
-        group = f"kmeans-jobcount-{uuid.uuid4().hex[:6]}"
-        sc.setJobGroup(group, "kmeans job counting")
-        try:
-            cents = kmeans_fit(df, k=k, iters=2, vec_col="embedding")
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert len(cents) == k
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    jobs_small, jobs_large = n_jobs(8), n_jobs(64)
-    assert jobs_large <= jobs_small + 2, (jobs_small, jobs_large)
-    df.unpersist()
-
-
-def test_pq_adc_exact_on_reconstructible_vectors(spark):
-    """On vectors COMPOSED of a small per-subspace pattern set, trained
-    codebooks reconstruct every vector exactly, so ADC distances equal true
-    L2 and the PQ top-k matches the exact top-k (recall 1.0)."""
-    import random
-
-    from pyspark.sql import Window
-
-    from nursing_home_data_etl_pipeline_spark.operators.similarity import (
-        pq_encode,
-        pq_topk_adc,
-        pq_train,
-    )
-
-    rng = random.Random(7)
-    pats = {
-        s: [[round(rng.uniform(-1, 1), 3) for _ in range(8)] for _ in range(4)]
-        for s in range(8)
-    }
-    rows = []
-    for i in range(120):
-        vec = []
-        for s in range(8):
-            vec += pats[s][rng.randrange(4)]
-        rows.append((i, vec))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    books = pq_train(df, dim=64, m=8, k=4, iters=3)
-    assert len(books) == 8 and all(len(b) == 4 and len(b[0]) == 8 for b in books)
-    codes = pq_encode(df, books)
-    # codes are within range and the encoding is a map-only pass
-    first = codes.collect()
-    assert all(0 <= c <= 3 for r in first for c in r.pq_code)
-
-    queries = df.filter("vec_id < 5")
-    pq_n = {
-        (r.query_id, r.neighbor_id)
-        for r in pq_topk_adc(queries, codes, books, k=10).collect()
-    }
-    d2 = F.aggregate(
-        F.zip_with(
-            "_qv",
-            "_cv",
-            lambda a, b: (a.cast("double") - b.cast("double"))
-            * (a.cast("double") - b.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"))
-    c = df.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv"))
-    pairs = (
-        c.join(F.broadcast(q), F.lit(True))
-        .filter("query_id <> neighbor_id")
-        .select("query_id", "neighbor_id", d2.alias("d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("d2"), F.col("neighbor_id"))
-    ex_n = {
-        (r.query_id, r.neighbor_id)
-        for r in pairs.withColumn("rank", F.row_number().over(w))
-        .filter("rank <= 10")
-        .collect()
-    }
-    assert pq_n == ex_n
-
-
 def test_exact_dedup_null_text_rows_pass_through(spark):
     """Distinct documents with NULL text are NOT duplicates of each other:
     SQL GROUP BY would fold them into one group and silently delete all but
@@ -639,28 +421,6 @@ def test_jaccard_hot_shingle_cap_matches_oracle(spark):
         (a, b, j) for a, b, _, j in con.execute(_jaccard_pairs_sql(2, 0.0)).fetchall()
     )
     assert oracle == got
-
-
-def test_kmeans_sweep_excludes_dirty_vectors(spark):
-    """Round-8 hunt: the NULL-element/ragged exclusion must hold in the
-    Lloyd SWEEP, not just the init sample — a dirty vector NULLs the
-    distance to every centroid, struct-min ties it to cell 0, and its
-    posexplode rows drag (or for ragged vectors, LENGTHEN) that centroid."""
-    from nursing_home_data_etl_pipeline_spark.operators.similarity import kmeans_fit
-
-    df = spark.createDataFrame(
-        [
-            (1, [0.0, 0.0]),
-            (2, [0.1, 0.1]),
-            (3, [10.0, 10.0]),
-            (4, [10.1, 10.1]),
-            (5, [None, 5.0]),       # NULL element
-            (6, [1.0, 2.0, 3.0]),   # ragged (3-dim)
-        ],
-        "vec_id int, embedding array<double>",
-    )
-    cents = sorted(kmeans_fit(df, k=2, iters=2))
-    assert cents == [[0.05, 0.05], [10.05, 10.05]]
 
 
 def test_lsh_excludes_off_dim_vectors(spark):

@@ -99,20 +99,6 @@ def test_chunk_table_rejects_negative_overlap(spark):
         chunk_table(df, chunk_words=50, overlap=-10)
 
 
-def test_kmeans_fit_excludes_null_embeddings(spark):
-    """One NULL embedding (or a NULL element) must not crash the driver-
-    side init; zero vectors stay — they are valid L2 points."""
-    from nursing_home_data_etl_pipeline_spark.operators.similarity import kmeans_fit
-
-    rows = [
-        (0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [5.0, 5.0]),
-        (3, None), (4, [None, 2.0]), (5, [0.0, 0.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = kmeans_fit(df, k=2, iters=1)
-    assert len(cents) == 2 and all(len(c) == 2 for c in cents)
-
-
 def test_asof_join_output_name_collision_raises(spark):
     import pytest
 
@@ -132,11 +118,11 @@ def test_sampling_boundary_is_rounded_not_truncated(spark):
     be 5700 — fractions are exact at 1/10000 granularity."""
     from nursing_home_data_etl_pipeline_spark.operators.sampling import (
         _hash_bucket,
-        deterministic_sample,
+        stratified_deterministic_sample,
     )
 
-    df = spark.createDataFrame([(i,) for i in range(4000)], "doc_id long")
-    kept = deterministic_sample(df, "doc_id", fraction=0.57, salt="s")
+    df = spark.createDataFrame([(i, "a") for i in range(4000)], "doc_id long, s string")
+    kept = stratified_deterministic_sample(df, "doc_id", "s", {"a": 0.57}, salt="s")
     expect = df.filter(_hash_bucket(F.col("doc_id"), "s") < 5700)
     assert kept.count() == expect.count()
 
@@ -154,16 +140,3 @@ def test_pii_hit_count_ignores_preexisting_placeholders(spark):
     )
     got = {r.id: r.n for r in df.select("id", pii_hit_count(F.col("text")).alias("n")).collect()}
     assert got == {1: 1, 2: 0, 3: 1}
-
-
-def test_word_shingles_blank_yields_empty_array(spark):
-    from nursing_home_data_etl_pipeline_spark.functions.text import word_shingles
-
-    df = spark.createDataFrame(
-        [(1, "a b"), (2, ""), (3, " \t "), (4, None)], "id long, text string"
-    )
-    got = {
-        r.id: r.s
-        for r in df.select("id", word_shingles(F.col("text")).alias("s")).collect()
-    }
-    assert got[1] == ["a b"] and got[2] == [] and got[3] == [] and got[4] is None

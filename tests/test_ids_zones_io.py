@@ -234,93 +234,6 @@ def test_error_sink_records_secondary_quarantine_failure(spark, tmp_path):
     assert "quarantine_error" in diag and diag["quarantine_traceback"]
 
 
-def test_jsonl_roundtrip(spark, tmp_path):
-    """JSONL export/import round-trip with explicit schema (no inference
-    scan) and partitioned layout."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from nursing_home_data_etl_pipeline_spark.sources.readers import read_jsonl
-    from nursing_home_data_etl_pipeline_spark.sources.writers import write_jsonl
-
-    df = spark.range(20).select(
-        "id",
-        F.concat(F.lit("doc "), F.col("id")).alias("text"),
-        (F.col("id") % 2).alias("shard"),
-    )
-    out = str(tmp_path / "corpus")
-    write_jsonl(df, out, partition_by=["shard"])
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    back = read_jsonl(spark, out, schema=schema)
-    assert back.count() == 20
-    got = {(r.id, r.text) for r in back.collect()}
-    assert got == {(i, f"doc {i}") for i in range(20)}
-    # partition pruning works on the exported layout
-    import glob
-
-    assert glob.glob(f"{out}/shard=*/")  # hive-style dirs exist
-
-
-def test_orc_roundtrip_and_pushdown(spark, tmp_path):
-    from nursing_home_data_etl_pipeline_spark.sources.readers import read_orc
-    from nursing_home_data_etl_pipeline_spark.sources.writers import write_orc
-
-    df = spark.range(100).selectExpr("id", "id % 7 AS g", "CAST(id AS STRING) s")
-    write_orc(df, str(tmp_path / "orc"), partition_by=["g"])
-    back = read_orc(spark, str(tmp_path / "orc"))
-    assert back.count() == 100
-    assert sorted(c for c in back.columns) == ["g", "id", "s"]
-    # partition pruning: the filter lands in PartitionFilters, not DataFilters
-    plan = back.filter("g = 3")._jdf.queryExecution().executedPlan().toString()
-    assert "DataFilters: []" in plan and "PartitionFilters: [isnotnull(g" in plan
-    assert back.filter("g = 3").count() == 14
-
-
-def test_csv_sink_untyped_identity(spark, tmp_path):
-    from nursing_home_data_etl_pipeline_spark.sources.readers import read_csv_untyped
-    from nursing_home_data_etl_pipeline_spark.sources.writers import write_csv
-
-    df = spark.createDataFrame(
-        [("1", "alpha"), ("2", "beta,with comma"), ("3", None)],
-        "k string, v string",
-    )
-    write_csv(df, str(tmp_path / "csv"))
-    back = read_csv_untyped(spark, str(tmp_path / "csv"))
-    assert back.dtypes == [("k", "string"), ("v", "string")]
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-
-
-def test_avro_raises_clearly_when_absent(spark, tmp_path):
-    """write_avro's ONLY gate is the classpath. Without spark-avro the
-    NotImplementedError carries the package coordinates; with it the sink
-    must round-trip values, NULLs, and the partition column. RECIPE to run
-    the happy path (this container has no network, so the external module
-    cannot be fetched here): start the session with
-    ``spark.jars.packages=org.apache.spark:spark-avro_2.13:4.1.2``
-    (match the PySpark version) and re-run this test — it asserts whichever
-    branch the classpath provides."""
-    from nursing_home_data_etl_pipeline_spark.sources.writers import write_avro
-
-    df = spark.createDataFrame(
-        [(1, "alpha", 1.5, "g1"), (2, None, None, "g2"), (3, "gamma", -0.25, "g1")],
-        "k long, v string, x double, g string",
-    )
-    try:
-        write_avro(df, str(tmp_path / "avro"), partition_by=("g",))
-    except NotImplementedError as ex:
-        assert "spark-avro" in str(ex)
-    else:  # classpath does provide avro: full typed round-trip
-        back = spark.read.format("avro").load(str(tmp_path / "avro"))
-        assert sorted(map(tuple, back.select(*df.columns).collect())) == sorted(
-            map(tuple, df.collect())
-        )
-
-
 def test_zone_layout_hadoop_fs_parity(spark, tmp_path):
     """list_domains/ensure go through the Hadoop FS API whenever a session
     exists (an s3a:// root must list the real zone, not a driver-local

@@ -845,7 +845,7 @@ def test_enrich_overlapping_noncolumn_key_does_not_crash(spark, tmp_path):
 
 
 def test_source_synced_at_header_refused_loudly(spark, tmp_path):
-    """A re-landed write_csv export carries the engine's own recency stamp
+    """A re-landed CSV export carries the engine's own recency stamp
     as a source header; silently replacing it with the file mtime would be
     invisible data loss, so universal_cleaning refuses (exact and case-
     variant names — the normalization-collision guard only catches variants

@@ -7,7 +7,6 @@ from nursing_home_data_etl_pipeline_spark.operators.joins import (
     latest_per_key,
     left_enrich,
     merge_scd1,
-    semi_join,
 )
 from nursing_home_data_etl_pipeline_spark.operators.projections import (
     drop_columns_if_present,
@@ -65,7 +64,6 @@ def test_anti_and_semi(spark):
     files = spark.createDataFrame([("a",), ("b",), ("c",)], ["file_id"])
     ledger = spark.createDataFrame([("a",)], ["file_id"])
     assert {r.file_id for r in anti_join(files, ledger, "file_id").collect()} == {"b", "c"}
-    assert {r.file_id for r in semi_join(files, ledger, "file_id").collect()} == {"a"}
 
 
 def test_merge_scd1_upsert(spark):

@@ -8,7 +8,6 @@ import re
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from nursing_home_data_etl_pipeline_spark.operators.cleaning import normalize_name
 from nursing_home_data_etl_pipeline_spark.sources.ingest import (
@@ -293,59 +292,6 @@ def test_asof_join_matches_naive_model(spark, left_rows, right_rows):
             want[i] = (v, rts)
         else:
             want[i] = (None, None)
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# Sessionize vs a naive per-user scan
-# ---------------------------------------------------------------------------
-
-_session_events = st.lists(
-    st.tuples(
-        st.integers(0, 2),  # user
-        st.integers(0, 500),  # ts seconds (duplicates exercise the tiebreak)
-    ),
-    min_size=1,
-    max_size=30,
-)
-
-
-@pytest.mark.usefixtures("spark")
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(events=_session_events, gap=st.sampled_from([1, 30, 120]))
-def test_sessionize_matches_naive_model(spark, events, gap):
-    """For ANY event multiset and gap, batch sessionization must equal the
-    naive per-user scan over (ts, event_id)-ordered events: a session starts
-    when the gap STRICTLY exceeds gap_seconds; ids are 1-based cumulative
-    counts. event_id makes equal-ts ordering (and so the whole assignment)
-    deterministic."""
-    from nursing_home_data_etl_pipeline_spark.operators.windows import sessionize
-
-    df = spark.createDataFrame(
-        [(i, u, t) for i, (u, t) in enumerate(events)],
-        "event_id long, user_id long, sec long",
-    ).select("event_id", "user_id", F.timestamp_seconds("sec").alias("ts"))
-    got = {
-        r.event_id: r.session_id
-        for r in sessionize(
-            df, "user_id", "ts", gap_seconds=gap, tiebreak=("event_id",)
-        ).collect()
-    }
-    want = {}
-    for u in {u for u, _ in events}:
-        ordered = sorted(
-            (t, i) for i, (uu, t) in enumerate(events) if uu == u
-        )
-        sid, prev = 0, None
-        for t, i in ordered:
-            if prev is None or t - prev > gap:
-                sid += 1
-            want[i] = sid
-            prev = t
     assert got == want
 
 

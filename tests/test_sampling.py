@@ -3,21 +3,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nursing_home_data_etl_pipeline_spark.operators.sampling import (
-    deterministic_sample,
     hash_split,
     stratified_deterministic_sample,
 )
-
-
-def test_deterministic_sample_stable_and_sized(spark):
-    df = spark.range(2000).withColumnRenamed("id", "k")
-    s1 = {r.k for r in deterministic_sample(df, "k", 0.3).collect()}
-    s2 = {r.k for r in deterministic_sample(df.repartition(13), "k", 0.3).collect()}
-    assert s1 == s2  # partitioning-independent
-    assert 0.25 < len(s1) / 2000 < 0.35
-    # monotone: a bigger fraction strictly contains the smaller one
-    s_half = {r.k for r in deterministic_sample(df, "k", 0.5).collect()}
-    assert s1 <= s_half
 
 
 def test_hash_split_partition_and_weights(spark):
@@ -49,12 +37,12 @@ def test_stratified_fractions(spark):
 def test_hash_split_unbiased_and_null_consistent(spark):
     """48-bit bucket hash: split fractions land within ~1% of the weights
     (the 16-bit original skewed 0.8 to a measured 0.817), NULL keys get a
-    deterministic sentinel assignment consistent with deterministic_sample,
+    deterministic sentinel assignment consistent with the sampling bucket,
     and mismatched weights/names raise instead of zip-truncating."""
     import pytest
 
     from nursing_home_data_etl_pipeline_spark.operators.sampling import (
-        deterministic_sample,
+        _hash_bucket,
         hash_split,
     )
 
@@ -73,7 +61,8 @@ def test_hash_split_unbiased_and_null_consistent(spark):
         r.k: r.split for r in hash_split(with_null, "k").collect()
     }[None]
     sampled_keys = {
-        r.k for r in deterministic_sample(with_null, "k", 1.0).collect()
+        r.k for r in with_null.filter(
+            _hash_bucket(F.col("k"), "sample") < 10000).collect()
     }
     assert None in sampled_keys  # fraction 1.0 keeps NULL keys too
     assert split_of_null in {"train", "val", "test"}

@@ -1,16 +1,11 @@
-"""Scale levers: bucketed co-located joins, partitioned writes with
-partition pruning, broadcast behavior — asserted on the physical plan, not
-just the result."""
+"""Scale levers: partitioned writes with partition pruning, broadcast
+behavior — asserted on the physical plan, not just the result."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from nursing_home_data_etl_pipeline_spark.sources.writers import (
-    write_bucketed,
-    write_parquet,
-)
+from nursing_home_data_etl_pipeline_spark.sources.writers import write_parquet
 
 
 def _physical_plan(df) -> str:
@@ -18,38 +13,6 @@ def _physical_plan(df) -> str:
     return df._jdf.queryExecution().explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
-
-
-@pytest.fixture()
-def bucketed_tables(spark, tmp_path):
-    # warehouse.dir is a static conf; isolate via a database LOCATION instead
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS buckets_test LOCATION '{tmp_path / 'wh'}'"
-    )
-    a = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-    )
-    b = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-    )
-    write_bucketed(a, "buckets_test.ta", ["k"], num_buckets=8, sort_cols=["k"])
-    write_bucketed(b, "buckets_test.tb", ["k"], num_buckets=8, sort_cols=["k"])
-    yield "buckets_test.ta", "buckets_test.tb"
-    spark.sql("DROP DATABASE buckets_test CASCADE")
-
-
-def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
-    ta, tb = bucketed_tables
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table(ta).join(spark.table(tb), "k")
-        plan = _physical_plan(joined)
-        assert "SortMergeJoin" in plan
-        # co-located buckets: no Exchange on either side
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
 def test_partitioned_write_prunes(spark, tmp_path):

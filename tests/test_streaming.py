@@ -90,73 +90,6 @@ def test_streaming_dropduplicates_with_watermark(spark, tmp_path):
     assert sorted(r.event_id for r in spark.table(name).collect()) == [1, 2]
 
 
-def test_stateful_ttl_variant_matches_on_bounded_input(spark):
-    """running_totals_stateful_ttl == running_totals_stateful over a bounded
-    single-run stream. The TTL cannot fire mid-run (6h >> test runtime), so
-    outputs must be identical; eviction semantics (hasTimedOut -> remove,
-    emit nothing) are asserted by the branch's construction. A
-    processing-time timeout keeps the query alive waiting for idle keys, so
-    this drain polls the sink then stops — processAllAvailable would block."""
-    import datetime as dt
-    import tempfile
-    import time
-
-    from pyspark.sql import types as T
-
-    from nursing_home_data_etl_pipeline_spark.plans.queries_streaming import (
-        _drain_to_parquet,
-    )
-    from nursing_home_data_etl_pipeline_spark.streaming.aggregations import (
-        running_totals_stateful,
-        running_totals_stateful_ttl,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    rows = [
-        (i % 5, dt.datetime(2024, 1, 1, 0, i), float(i)) for i in range(50)
-    ]
-    src = spark.createDataFrame(rows, schema)
-    with tempfile.TemporaryDirectory() as d:
-        src.write.mode("overwrite").parquet(d)
-
-        def stream():
-            return spark.readStream.schema(schema).parquet(d)
-
-        q = (
-            running_totals_stateful_ttl(stream())
-            .writeStream.format("memory")
-            .queryName("ttl_out")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                got = {
-                    (r.user_id, r.n_events, r.total_value)
-                    for r in spark.table("ttl_out").collect()
-                }
-                if len(got) == 5:
-                    break
-                time.sleep(0.5)
-        finally:
-            q.stop()
-        want = {
-            (r.user_id, r.n_events, r.total_value)
-            for r in _drain_to_parquet(
-                running_totals_stateful(stream()), "update"
-            ).collect()
-        }
-    assert got == want and len(got) == 5
-
-
 def test_stateful_totals_with_string_key(spark):
     """The stateful operator's output schema follows the actual key column
     name and type — a string key (event_type) used to crash Arrow

@@ -68,50 +68,6 @@ def test_streaming_upsert_no_order_col_dedups_batch(spark, tmp_path):
     assert state["a"] == (5, 2)  # struct-max (v, ver) — deterministic
 
 
-def test_streaming_incremental_agg_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: an epoch the target's _meta.json
-    already records as applied must NOT re-merge — count/sum merging is not
-    idempotent and double-counted before the epoch guard. Simulated by
-    stamping the meta epoch ahead, then draining a new batch of the SAME
-    checkpoint lineage: its (lower) epoch is skipped."""
-    import json
-
-    from nursing_home_data_etl_pipeline_spark.streaming.upsert import (
-        start_incremental_agg,
-    )
-
-    src = tmp_path / "rsrc"
-    src.mkdir()
-    target = str(tmp_path / "raggs")
-    ckpt = str(tmp_path / "rckpt")
-
-    def drain():
-        stream = spark.readStream.schema(SCHEMA).parquet(str(src))
-        q = start_incremental_agg(stream, target, ["pk"], "v", ckpt)
-        q.awaitTermination(120)
-
-    spark.createDataFrame([("a", 1, 1)], SCHEMA).write.mode("append").parquet(str(src))
-    drain()
-    meta_path = f"{target}/_meta.json"
-    meta = json.load(open(meta_path))
-    assert meta["epoch"] == 0 and meta["checkpoint"] == ckpt
-    before = {r.pk: (r.cnt, r.total) for r in spark.read.parquet(target).collect()}
-    assert before == {"a": (1, 1)}
-
-    # pretend this epoch range was already applied (the crash-replay state:
-    # swap landed, checkpoint commit didn't) — the next delivery must skip
-    json.dump({"epoch": 999, "checkpoint": ckpt}, open(meta_path, "w"))
-    import os
-
-    crc = f"{target}/._meta.json.crc"  # out-of-band edit invalidates the
-    if os.path.exists(crc):  # local-FS checksum sidecar; drop it
-        os.remove(crc)
-    spark.createDataFrame([("a", 2, 2)], SCHEMA).write.mode("append").parquet(str(src))
-    drain()
-    after = {r.pk: (r.cnt, r.total) for r in spark.read.parquet(target).collect()}
-    assert after == before  # skipped — not double-counted
-
-
 def test_recover_dir_restores_crashed_swap(spark, tmp_path):
     """Crash between replace_dir's two renames leaves the accumulated table
     at __old with the target missing. recover_dir must restore it, and
@@ -164,35 +120,6 @@ def test_streaming_upsert_no_order_col_map_column(spark, tmp_path):
     assert len(rows) == 1 and rows[0].v == 2  # max orderable (v) wins
 
 
-def test_streaming_incremental_agg_checkpoint_lineage_guard(spark, tmp_path):
-    """Pointing a DIFFERENT checkpoint at a maintained aggregate target must
-    fail loudly (epochs restart at 0 in a new lineage; the bare-number
-    guard would silently skip batches)."""
-    import pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from nursing_home_data_etl_pipeline_spark.streaming.upsert import (
-        start_incremental_agg,
-    )
-
-    src = tmp_path / "lsrc"
-    src.mkdir()
-    target = str(tmp_path / "laggs")
-    spark.createDataFrame([("a", 1, 1)], SCHEMA).write.mode("append").parquet(str(src))
-    stream = spark.readStream.schema(SCHEMA).parquet(str(src))
-    q = start_incremental_agg(stream, target, ["pk"], "v", str(tmp_path / "lckpt"))
-    q.awaitTermination(120)
-
-    spark.createDataFrame([("a", 5, 2)], SCHEMA).write.mode("append").parquet(str(src))
-    stream2 = spark.readStream.schema(SCHEMA).parquet(str(src))
-    q2 = start_incremental_agg(
-        stream2, target, ["pk"], "v", str(tmp_path / "OTHER_ckpt")
-    )
-    with pytest.raises(StreamingQueryException, match="checkpoint"):
-        q2.awaitTermination(120)
-        q2.processAllAvailable()
-
-
 def test_streaming_upsert_merge_error_fails_query_not_wipes_dim(spark, tmp_path):
     """ADVICE round-1 regression: a merge-time failure on a later micro-batch
     must FAIL the streaming query (checkpoint replays it safely), not be
@@ -230,57 +157,3 @@ def test_streaming_upsert_merge_error_fails_query_not_wipes_dim(spark, tmp_path)
     after = {r.pk for r in spark.read.parquet(target).collect()}
     assert after == {"a"}
 
-
-def test_streaming_incremental_agg_matches_batch_recompute(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from nursing_home_data_etl_pipeline_spark.streaming.upsert import (
-        start_incremental_agg,
-    )
-
-    src = tmp_path / "asrc"
-    src.mkdir()
-    target = str(tmp_path / "aggs")
-    ckpt = str(tmp_path / "ackpt")
-
-    def drain():
-        stream = spark.readStream.schema(SCHEMA).parquet(str(src))
-        q = start_incremental_agg(stream, target, ["pk"], "v", ckpt)
-        q.awaitTermination(120)
-
-    spark.createDataFrame(
-        [("a", 1, 1), ("a", 5, 2), ("b", 2, 1)], SCHEMA
-    ).write.mode("append").parquet(str(src))
-    drain()
-    spark.createDataFrame(
-        [("a", 9, 3), ("c", 7, 1), ("b", -4, 2)], SCHEMA
-    ).write.mode("append").parquet(str(src))
-    drain()
-
-    got = {
-        r.pk: (r.cnt, r.total, r.vmin, r.vmax)
-        for r in spark.read.parquet(target).collect()
-    }
-    truth = {
-        r.pk: (r.cnt, r.total, r.vmin, r.vmax)
-        for r in spark.read.parquet(str(src))
-        .groupBy("pk")
-        .agg(
-            F.count("v").alias("cnt"),
-            F.sum("v").alias("total"),
-            F.min("v").alias("vmin"),
-            F.max("v").alias("vmax"),
-        )
-        .collect()
-    }
-    assert got == truth == {
-        "a": (3, 15, 1, 9),
-        "b": (2, -2, -4, 2),
-        "c": (1, 7, 7, 7),
-    }
-    # idle drain: checkpoint prevents double counting
-    drain()
-    assert {
-        r.pk: (r.cnt, r.total, r.vmin, r.vmax)
-        for r in spark.read.parquet(target).collect()
-    } == truth

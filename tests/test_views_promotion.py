@@ -1,64 +1,13 @@
 from __future__ import annotations
 
-from nursing_home_data_etl_pipeline_spark.operators.cleaning import promote_types
-from nursing_home_data_etl_pipeline_spark.plans.views import register_test_tables
 
-
-def test_register_test_tables_sql(spark, sf_dir):
-    register_test_tables(spark, sf_dir)
-    row = spark.sql(
-        "SELECT count(*) AS n FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
-    ).collect()[0]
-    assert row.n > 0
-
-
-def test_promote_types(spark):
-    df = spark.createDataFrame(
-        [
-            ("1", "1.5", "2020-01-02", "abc", ""),
-            ("22", "2", "2021-03-04", "5", "x"),
-            (None, "3.25", None, "z9", ""),
-        ],
-        ["ints", "doubles", "dates", "mixed", "empties"],
-    )
-    out = promote_types(df)
-    types = {f.name: f.dataType.simpleString() for f in out.schema.fields}
-    assert types["ints"] == "bigint"
-    assert types["doubles"] == "double"
-    assert types["dates"] == "date"
-    assert types["mixed"] == "string"  # not all values parse
-    assert types["empties"] == "string"  # nothing but null tokens -> left alone
-    rows = out.collect()
-    assert rows[1].ints == 22 and rows[1].doubles == 2.0
-    assert rows[2].ints is None  # null survives promotion
-
-
-def test_promote_types_noop_on_typed(spark):
-    df = spark.range(3)
-    assert promote_types(df) is df
-
-
-def test_promote_types_preserves_leading_zero_ids(spark):
-    # CMS CCNs like "015009" parse numerically but are identifiers
-    df = spark.createDataFrame(
-        [("015009", "5"), ("123456", "03")], ["ccn", "rating"]
-    )
-    types = {f.name: f.dataType.simpleString() for f in promote_types(df).schema.fields}
-    assert types["ccn"] == "string"  # one leading-zero value blocks the column
-    assert types["rating"] == "string"  # "03" blocks too
-    df2 = spark.createDataFrame([("15009",), ("123456",)], ["ccn"])
-    assert promote_types(df2).schema["ccn"].dataType.simpleString() == "bigint"
-
-
-def test_register_warehouse_views_heals_crashed_swap(spark, tmp_path):
+def test_recover_dir_heals_crashed_swap(spark, tmp_path):
     """A replace_dir swap that crashed between its two renames leaves
-    dim__old as the only full copy; registration must recover the real dim
-    and never expose __old/__staging leftovers as queryable views."""
+    dim__old as the only full copy; recover_dir must restore the real dim
+    from it."""
     import os
 
-    from nursing_home_data_etl_pipeline_spark.plans.views import (
-        register_warehouse_views,
-    )
+    from nursing_home_data_etl_pipeline_spark.sources.writers import recover_dir
     from nursing_home_data_etl_pipeline_spark.zones import ZoneLayout
 
     zones = ZoneLayout(str(tmp_path))
@@ -67,11 +16,9 @@ def test_register_warehouse_views_heals_crashed_swap(spark, tmp_path):
         .write.parquet(zones.warehouse("dim_rating_t"))
     # crash between the renames: target gone, __old is the only copy
     os.rename(zones.warehouse("dim_rating_t"), zones.warehouse("dim_rating_t__old"))
-    # partial write leftover from an interrupted staging
-    os.makedirs(zones.warehouse("dim_junk__staging"))
 
-    registered = register_warehouse_views(spark, zones)
-    assert registered == ["dim_rating_t"]
-    assert spark.sql("SELECT rating FROM dim_rating_t").collect()[0].rating == 5
+    assert recover_dir(spark, zones.warehouse("dim_rating_t"))
+    healed = spark.read.parquet(zones.warehouse("dim_rating_t"))
+    assert healed.collect()[0].rating == 5
     assert os.path.isdir(zones.warehouse("dim_rating_t"))       # healed on disk
     assert not os.path.isdir(zones.warehouse("dim_rating_t__old"))
