@@ -2,8 +2,9 @@
 reference's EventBridge -> Step Function -> {Lambda, Glue} orchestration
 (cloudformation/04_stepfunction-pipeline.yml:47-190): sync -> cleaning ->
 archive -> validate -> [provider ∥ quality] -> warehouse merge -> run log.
-The parallel stage is a thread pool over ONE session (Spark interleaves
-both DAGs — the engine-native twin of the reference's two Glue clusters).
+Independent per-domain, per-output and per-dim work, and provider ∥ quality,
+runs side by side on ONE session (session.map_concurrently): Spark interleaves
+the DAGs and hides each small query's driver-side cost.
 Fail-fast matches Catch->FailAll with two deliberate fixes: the validation
 gate RAISES (the reference ignored its Lambda's error status — SURVEY
 §3.1.5) and the fixed 10s WaitForCleaning sleep is dropped.
@@ -23,6 +24,7 @@ from pyspark.sql import functions as F
 
 from .operators.joins import merge_scd1
 from .runlog import RunLog, RunLogEntry
+from .session import ITEM_S, map_concurrently
 from .sources.ingest import (
     DEFAULT_FILE_TYPE_MAPPING,
     IngestLedger,
@@ -111,11 +113,13 @@ def run_stage(
         t0 = time.time()
         detail: dict = {"attempt": attempt, "max_retries": policy.max_retries}
         group = f"{run_id}:{step}:{attempt}"
+        item_s: dict = {}
 
         def worker():
             # Job group is thread-local: set it inside the worker so only
             # this stage's jobs are cancelled on timeout.
             spark.sparkContext.setJobGroup(group, step, interruptOnCancel=True)
+            ITEM_S.set(item_s)
             return fn()
 
         pool = ThreadPoolExecutor(max_workers=1)
@@ -130,6 +134,8 @@ def run_stage(
                     detail.update(detail_of(out))
                 except Exception as exc:
                     detail["detail_error"] = repr(exc)
+            if item_s:
+                detail["item_s"] = item_s
             log.append(RunLogEntry(run_id, step, "SUCCESS", t0, time.time(), detail))
             return out
 
@@ -172,17 +178,16 @@ def run_stage(
 def merge_warehouse(
     spark: SparkSession, zones: ZoneLayout, outputs: dict[str, str]
 ) -> list[str]:
-    """SCD1-merge every transform output into its warehouse dim — the
-    engine's replacement for Snowflake SP_MERGE_ALL_DIMS (README.md:238-269).
-    First run bootstraps the dim from the source as-is. The merge key is the
-    facility PK (plus measure_code for the quality grain).
+    """SCD1-merge every transform output into its warehouse dim, one
+    concurrent branch per dim — the engine's replacement for Snowflake
+    SP_MERGE_ALL_DIMS (README.md:238-269). Returns the dims in DIM_TABLES
+    order. First run bootstraps the dim from the source as-is. The merge key
+    is the facility PK (plus measure_code for the quality grain).
     """
     from .operators.joins import latest_per_key
 
-    merged = []
-    for output, dim in DIM_TABLES.items():
-        if output not in outputs:
-            continue
+    def merge_one(output: str) -> str:
+        dim = DIM_TABLES[output]
         keys = [PK, "measure_code"] if output == "quality" else [PK]
         source = read_parquet(spark, outputs[output])
         # Multi-drop cycles resolve to the NEWEST DROP via the per-file
@@ -218,8 +223,9 @@ def merge_warehouse(
         # Plain Parquet has no transactional MERGE: materialize to a staging
         # suffix and swap in with an atomic delete+rename.
         replace_dir(result, target_path)
-        merged.append(dim)
-    return merged
+        return dim
+
+    return map_concurrently(spark, merge_one, [o for o in DIM_TABLES if o in outputs])
 
 
 def run(
@@ -270,21 +276,10 @@ def run(
     stage("validate", lambda: require_staged(spark, zones, required_domains))
 
     def do_transforms():
-        # Job-group locals are thread-local and NOT inherited by child
-        # threads — re-assert this stage's group inside each branch so
-        # run_stage's timeout cancellation reaches the transform jobs.
-        sc = spark.sparkContext
-        group = sc.getLocalProperty("spark.jobGroup.id")
-
-        def in_group(fn):
-            if group:
-                sc.setJobGroup(group, "transform_parallel", interruptOnCancel=True)
-            return fn(spark, zones)
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_provider = pool.submit(in_group, provider_transform)
-            f_quality = pool.submit(in_group, quality_transform)
-            return {**f_provider.result(), **f_quality.result()}
+        provider, quality = map_concurrently(
+            spark, lambda t: t(spark, zones), (provider_transform, quality_transform)
+        )
+        return {**provider, **quality}
 
     res.transformed = stage(
         "transform_parallel", do_transforms, lambda t: {"outputs": sorted(t)}

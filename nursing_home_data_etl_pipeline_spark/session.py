@@ -8,10 +8,18 @@ on a cluster only the master/memory lines change."""
 from __future__ import annotations
 
 import os
+import time
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
+from contextvars import ContextVar, copy_context
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "nursing_home_data_etl_pipeline_spark"
+
+#: The running pipeline stage's ``{item: wall seconds}`` (pipeline.run_stage).
+ITEM_S: ContextVar[dict | None] = ContextVar("item_s", default=None)
 
 
 def default_parallelism() -> int:
@@ -50,3 +58,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def map_concurrently(spark: SparkSession, fn: Callable, items: Iterable) -> list:
+    """Run ``fn(item)`` on one thread per item over ONE session, wait for
+    every branch, and return the results in item order; if any branch
+    failed, raise the first failure in item order. Each branch inherits the
+    caller's job group (so a stage timeout cancels its jobs) and ITEM_S.
+    Design notes: docs/DESIGN.md#pipeline-module"""
+    item_s, items = ITEM_S.get(), list(items)
+
+    def timed(item):
+        t0 = time.time()
+        try:
+            return fn(item)
+        finally:
+            if item_s is not None:
+                item_s[getattr(item, "__name__", str(item))] = round(time.time() - t0, 3)
+
+    branch = inheritable_thread_target(spark)(timed)
+    with ThreadPoolExecutor(max_workers=max(len(items), 1)) as pool:
+        futures = [pool.submit(copy_context().run, branch, i) for i in items]
+    return [f.result() for f in futures]

@@ -10,6 +10,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from ..session import map_concurrently
 from ..zones import ZoneLayout
 
 #: The reference's required staging inputs
@@ -38,19 +39,17 @@ def staging_status(
 ) -> list[DomainStatus]:
     from .readers import data_files_exist
 
-    out = []
-    for d in domains:
+    def status(d: str) -> DomainStatus:
         path = zones.staging(d)
         # Absence is a filesystem probe; a dir that HAS data files but
         # cannot be read raises instead of masquerading as "not staged" —
         # report the real failure, not a missing-domain message.
         if not data_files_exist(spark, path):
-            out.append(DomainStatus(d, False, False))
-            continue
-        df = spark.read.parquet(path)
+            return DomainStatus(d, False, False)
         # LIMIT-1 existence probe — never a full count at scale.
-        out.append(DomainStatus(d, True, not df.isEmpty()))
-    return out
+        return DomainStatus(d, True, not spark.read.parquet(path).isEmpty())
+
+    return map_concurrently(spark, status, domains)
 
 
 def require_staged(

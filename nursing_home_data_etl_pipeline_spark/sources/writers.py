@@ -13,7 +13,7 @@ import os
 import traceback
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def write_parquet(
@@ -90,6 +90,7 @@ def recover_dir(spark, target_path: str) -> bool:
 
 
 def write_error(
+    spark: SparkSession,
     df: DataFrame | None,
     error_path: str,
     context: str,
@@ -98,32 +99,22 @@ def write_error(
     """S4: quarantine the failing input frame (if any) plus a diagnostics
     sidecar; never references an unbound frame (reference bug B1), renders
     THE passed exception (format_exception(exc), not ambient format_exc()),
-    and writes the sidecar via the Hadoop FS API so it lands next to the
+    and writes the sidecar via ``spark``'s Hadoop FS so it lands next to the
     parquet on ANY scheme. Design notes: docs/DESIGN.md#writers-write-error"""
     diag = {
         "context": context,
         "error": repr(exc) if exc else None,
         "traceback": "".join(traceback.format_exception(exc)) if exc else None,
     }
-    from pyspark.sql import SparkSession
-
-    spark = df.sparkSession if df is not None else SparkSession.getActiveSession()
 
     def put_diagnostics() -> None:
-        if spark is not None:
-            jvm = spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(error_path, "_diagnostics.json")
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            out = fs.create(jpath, True)
-            try:
-                out.write(bytearray(json.dumps(diag, indent=2), "utf-8"))
-            finally:
-                out.close()
-        else:
-            # no session handle to reach a remote FS — driver-local fallback
-            os.makedirs(error_path, exist_ok=True)
-            with open(os.path.join(error_path, "_diagnostics.json"), "w") as f:
-                json.dump(diag, f, indent=2)
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(error_path, "_diagnostics.json")
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        out = fs.create(jpath, True)
+        try:
+            out.write(bytearray(json.dumps(diag, indent=2), "utf-8"))
+        finally:
+            out.close()
 
     put_diagnostics()
     if df is not None:

@@ -4,7 +4,9 @@ provider_transform <- nh-etl-provider-transform.py, quality_transform <-
 nh-etl-quality-transform.py. Deltas (SURVEY.md §2.9): error sink gets the
 real frame + exception (B1/B2), no no-op renames (B3) or dead drops (B4),
 the provider scan is CACHED before the five-output fan-out (the reference
-re-read staging per output, §3.3), single-select cleaning (B7)."""
+re-read staging per output, §3.3), single-select cleaning (B7). Domains and
+the five provider writes run concurrently on the one session
+(session.map_concurrently); a failing one quarantines its own frame."""
 
 from __future__ import annotations
 
@@ -24,6 +26,7 @@ from .operators.projections import (
     select_columns,
     select_columns_matching,
 )
+from .session import map_concurrently
 from .sources.readers import data_files_exist, is_empty, read_csv_untyped, read_parquet
 from .sources.writers import write_error, write_parquet
 from .zones import ZoneLayout
@@ -103,12 +106,12 @@ def universal_cleaning(
 ) -> list[str]:
     """Per source-zone domain: CSV -> clean -> stamp -> staging Parquet.
 
-    Returns the list of domains staged. Empty domains are skipped (the
-    reference's empty-folder guard, cleaning:77-79); failures quarantine the
-    in-flight frame to the error zone and re-raise.
+    Returns the list of domains staged, in domain order. Empty domains are
+    skipped (the reference's empty-folder guard, cleaning:77-79); a failing
+    domain quarantines its in-flight frame to the error zone, and the first
+    failure in domain order is re-raised once every domain has finished.
     """
-    staged = []
-    for domain in domains or zones.list_domains("source", spark):
+    def clean_one(domain: str) -> str | None:
         df = None
         try:
             # Probe BEFORE the read: inference on an existing-but-empty
@@ -116,10 +119,10 @@ def universal_cleaning(
             # later run (round-8 IO hunt) — same missing-vs-broken
             # helper the ledger uses.
             if not data_files_exist(spark, zones.source(domain)):
-                continue
+                return None
             df = read_csv_untyped(spark, zones.source(domain))
             if is_empty(df):
-                continue
+                return None
             # Per-file recency from _metadata (file mtime IS sync time);
             # added pre-clean so normalizing headers collide loudly; an
             # exact 'synced_at' header is refused (withColumn would
@@ -137,11 +140,15 @@ def universal_cleaning(
             )
             cleaned = with_etl_metadata(clean_table(df))
             write_parquet(cleaned, zones.staging(domain))
-            staged.append(domain)
+            return domain
         except Exception as exc:
-            write_error(df, zones.error(f"cleaning_{domain}"), f"cleaning:{domain}", exc)
+            write_error(
+                spark, df, zones.error(f"cleaning_{domain}"), f"cleaning:{domain}", exc
+            )
             raise
-    return staged
+
+    domains = domains or zones.list_domains("source", spark)
+    return [d for d in map_concurrently(spark, clean_one, domains) if d is not None]
 
 
 def provider_transform(spark: SparkSession, zones: ZoneLayout) -> dict[str, str]:
@@ -197,23 +204,25 @@ def provider_transform(spark: SparkSession, zones: ZoneLayout) -> dict[str, str]
         )
     outputs["penalties"] = penalties_dim
 
-    written: dict[str, str] = {}
+    def write_one(name: str) -> str:
+        path, df = zones.transform(name), outputs[name]
+        try:
+            write_parquet(with_etl_metadata(df, order_by=[PK]), path)
+        except Exception as exc:
+            write_error(
+                spark, df, zones.error(f"transform_{name}"), f"provider:{name}", exc
+            )
+            raise
+        return path
+
     try:
-        for name, df in outputs.items():
-            path = zones.transform(name)
-            try:
-                write_parquet(with_etl_metadata(df, order_by=[PK]), path)
-            except Exception as exc:
-                write_error(
-                    df, zones.error(f"transform_{name}"), f"provider:{name}", exc
-                )
-                raise
-            written[name] = path
+        provider.count()  # materialize once, not once per concurrent write
+        return dict(zip(outputs, map_concurrently(spark, write_one, outputs)))
     finally:
-        # also on failure: a leaked cache would pin executor storage memory
-        # across this stage's retries and every later stage in the session
+        # after every write finished, also on failure: a leaked cache would
+        # pin executor storage memory across this stage's retries and every
+        # later stage in the session
         provider.unpersist()
-    return written
 
 
 def quality_transform(spark: SparkSession, zones: ZoneLayout) -> dict[str, str]:
@@ -226,5 +235,5 @@ def quality_transform(spark: SparkSession, zones: ZoneLayout) -> dict[str, str]:
         write_parquet(with_etl_metadata(out, order_by=[PK, "measure_code"]), path)
         return {"quality": path}
     except Exception as exc:
-        write_error(df, zones.error("transform_quality"), "quality", exc)
+        write_error(spark, df, zones.error("transform_quality"), "quality", exc)
         raise

@@ -207,15 +207,33 @@ def test_parquet_sink_and_empty_guard(spark, tmp_path):
     assert is_empty(back.filter("k > 1"))
 
 
-def test_error_sink_without_frame(tmp_path):
+def test_error_sink_without_frame(spark, tmp_path):
     # Bug B1 regression: error sink must work when the read itself failed.
-    write_error(None, str(tmp_path / "err"), "read failed", ValueError("boom"))
+    write_error(spark, None, str(tmp_path / "err"), "read failed", ValueError("boom"))
     assert (tmp_path / "err" / "_diagnostics.json").exists()
+
+
+def test_error_sink_inside_stage_uses_the_session_fs(spark, tmp_path, monkeypatch):
+    """On a stage's worker thread there is no active session to look up, so
+    the sidecar must go through the session it is given: a file:// error
+    path lands at that path, not in a './file:' directory under the cwd."""
+    from nursing_home_data_etl_pipeline_spark.pipeline import StagePolicy, run_stage
+    from nursing_home_data_etl_pipeline_spark.runlog import RunLog
+
+    monkeypatch.chdir(tmp_path)
+    err = f"file://{tmp_path}/err"
+    run_stage(
+        spark, RunLog(str(tmp_path / "log.jsonl")), "r1", "quarantine",
+        lambda: write_error(spark, None, err, "read failed", ValueError("boom")),
+        StagePolicy(max_retries=0, timeout_s=60, backoff_s=0.0),
+    )
+    assert (tmp_path / "err" / "_diagnostics.json").exists()
+    assert not (tmp_path / "file:").exists()
 
 
 def test_error_sink_with_frame(spark, tmp_path):
     df = spark.createDataFrame([(1,)], ["k"])
-    write_error(df, str(tmp_path / "err"), "transform failed", RuntimeError("x"))
+    write_error(spark, df, str(tmp_path / "err"), "transform failed", RuntimeError("x"))
     assert (tmp_path / "err" / "data").exists()
 
 
@@ -228,7 +246,9 @@ def test_error_sink_records_secondary_quarantine_failure(spark, tmp_path):
     poisoned = spark.createDataFrame([(1,)], ["k"]).select(
         F.assert_true(F.col("k") > 5).alias("x"), "k"
     )
-    write_error(poisoned, str(tmp_path / "err"), "transform failed", RuntimeError("orig"))
+    write_error(
+        spark, poisoned, str(tmp_path / "err"), "transform failed", RuntimeError("orig")
+    )
     diag = json.loads((tmp_path / "err" / "_diagnostics.json").read_text())
     assert diag["error"] == "RuntimeError('orig')"
     assert "quarantine_error" in diag and diag["quarantine_traceback"]
