@@ -270,7 +270,7 @@ def run(
     # never archived as successfully handled.
     known = {d for p, d in mapping.items() if p != "_DEFAULT"}
     res.archived = stage(
-        "archive", lambda: archive_source_files(zones, known), lambda a: dict(a)
+        "archive", lambda: archive_source_files(spark, zones, known), lambda a: dict(a)
     )
 
     stage("validate", lambda: require_staged(spark, zones, required_domains))

@@ -1,7 +1,8 @@
 """Ingest layer (SURVEY.md §2.1 S5-S9), reference behavior re-expressed:
 S5 landing-dir model for the out-of-scope Drive source
-(``sync-drive-to-s3.py:97-104``); S7 manifest dedup as a Parquet ledger +
-LEFT ANTI join (``sync-drive-to-s3.py:47-48,108-131``); S8 filename router
+(``sync-drive-to-s3.py:97-104``); S7 manifest dedup as a Parquet ledger,
+read once per sync and diffed against the listing as a driver-side set
+(``sync-drive-to-s3.py:47-48,108-131``); S8 filename router
 (``sync-drive-to-s3.py:40-45`` + ``script/config.json``): normalize, then
 substring-match a pattern->domain table with ``_DEFAULT`` fallback; S9
 archival move (``move_sources_files.py:19-42``): known -> processed,
@@ -14,8 +15,10 @@ import os
 import shutil
 from dataclasses import dataclass
 from pathlib import Path
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -108,69 +111,55 @@ def route_filename(
     return mapping.get("_DEFAULT", "unknown")
 
 
-def route_files_df(
-    files: DataFrame, mapping: dict[str, str] | None = None, name_col: str = "file_name"
-) -> DataFrame:
-    """Distributed router: the same routing as a ``when()`` chain over a
-    normalized name column — used when the listing itself is a DataFrame
-    (millions of files)."""
-    mapping = mapping or DEFAULT_FILE_TYPE_MAPPING
-    norm = F.lower(
-        F.regexp_replace(F.regexp_replace(F.col(name_col), r"\.[^.]*$", ""), "NH_|_", "")
-    )
-    expr = F.lit(mapping.get("_DEFAULT", "unknown"))
-    for pattern, domain in reversed(
-        [(p, d) for p, d in mapping.items() if p != "_DEFAULT"]
-    ):
-        expr = F.when(norm.contains(pattern), F.lit(domain)).otherwise(expr)
-    return files.withColumn("domain", expr)
+class LandingFile(NamedTuple):
+    """One routed landing file: a ledger row without its synced_at stamp."""
+
+    file_id: str
+    file_name: str
+    path: str
+    domain: str
 
 
 @dataclass
 class IngestLedger:
-    """S7: Parquet-backed ingest ledger with anti-join dedup."""
+    """S7: Parquet-backed ingest ledger, read once per sync and diffed on
+    the driver (:func:`unsynced`)."""
 
     spark: SparkSession
     path: str
 
-    def read(self) -> DataFrame:
-        # Bootstrap is an explicit filesystem probe, not an exception
-        # fallback: a CORRUPT ledger must fail loudly, not read as empty
-        # and re-ingest everything (missing-vs-broken, ADVICE round 1).
+    def read(self) -> list[Row]:
+        """Every ledger row, collected: one Spark job, none before the
+        first record. Bootstrap is an explicit filesystem probe, not an
+        exception fallback: a CORRUPT ledger must fail loudly, not read as
+        empty and re-ingest everything (missing-vs-broken, ADVICE round 1)."""
         from .readers import data_files_exist
 
         if not data_files_exist(self.spark, self.path):
-            return self.spark.createDataFrame([], LEDGER_SCHEMA)
-        return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
+            return []
+        return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path).collect()
 
-    def new_files(self, listing: DataFrame) -> DataFrame:
-        """Files in ``listing`` whose file_id is not yet in the ledger —
-        the reference's manifest skip (sync-drive-to-s3.py:109-111) as a
-        LEFT ANTI join."""
-        return listing.join(
-            self.read().select("file_id"), on="file_id", how="left_anti"
+    def record(self, files: list[LandingFile]) -> None:
+        """Append newly synced files with a synced_at stamp: one write of
+        an Arrow-built frame, which the JVM decodes without a Python worker."""
+        table = pa.table(
+            {name: [getattr(f, name) for f in files] for name in LandingFile._fields}
         )
-
-    def record(self, synced: DataFrame) -> None:
-        """Append newly synced files (with a synced_at stamp) to the ledger."""
         (
-            synced.select(
-                "file_id",
-                "file_name",
-                "path",
-                "domain",
-                F.current_timestamp().alias("synced_at"),
-            )
+            self.spark.createDataFrame(table, LEDGER_SCHEMA[:4])
+            .select(*LandingFile._fields, F.current_timestamp().alias("synced_at"))
             .write.mode("append")
             .parquet(self.path)
         )
 
 
-def list_landing_files(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """Landing-dir listing DataFrame. file_id = RELATIVE path + size +
-    mtime (basename alone collided across subdirs and shadowed ledger
-    entries) — the analog of the reference's Drive file_id; file_name
-    stays the basename for routing.
+def list_landing_files(
+    landing_dir: str, mapping: dict[str, str] | None = None
+) -> list[LandingFile]:
+    """Landing-dir listing, each file routed by :func:`route_filename`.
+    file_id = RELATIVE path + size + mtime (basename alone collided across
+    subdirs and shadowed ledger entries) — the analog of the reference's
+    Drive file_id; file_name stays the basename for routing.
     Design notes: docs/DESIGN.md#ingest-list-landing-files"""
     rows = []
     base = Path(landing_dir)
@@ -186,20 +175,22 @@ def list_landing_files(spark: SparkSession, landing_dir: str) -> DataFrame:
                     continue
                 st = p.stat()
                 rows.append(
-                    (
+                    LandingFile(
                         f"{p.relative_to(base)}:{st.st_size}:{int(st.st_mtime_ns)}",
                         p.name,
                         str(p),
+                        route_filename(p.name, mapping),
                     )
                 )
-    schema = T.StructType(
-        [
-            T.StructField("file_id", T.StringType(), False),
-            T.StructField("file_name", T.StringType(), True),
-            T.StructField("path", T.StringType(), True),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
+    return rows
+
+
+def unsynced(listing: list[LandingFile], ledger_rows: list[Row]) -> list[LandingFile]:
+    """Files in ``listing`` whose file_id is not in the ledger — the
+    reference's manifest skip (sync-drive-to-s3.py:109-111) as a
+    driver-side set difference."""
+    synced = {r.file_id for r in ledger_rows}
+    return [f for f in listing if f.file_id not in synced]
 
 
 def sync_landing_to_source(
@@ -210,17 +201,18 @@ def sync_landing_to_source(
     mapping: dict[str, str] | None = None,
     dry_run: bool = False,
 ) -> int:
-    """The reference's sync Lambda as an engine op: list landing files,
-    skip already-ingested (ledger anti-join), route by filename, copy into
+    """The reference's sync Lambda as an engine op: list and route landing
+    files, skip already-ingested ones (ledger diff), copy into
     ``source/{domain}/``, record in the ledger. Returns files synced.
     ``dry_run`` mirrors the reference's side-effect-free rehearsal mode
-    (sync-drive-to-s3.py:68-71)."""
+    (sync-drive-to-s3.py:68-71). Spark work: one ledger read (none before
+    the first record) and one ledger append."""
     _require_local_root(zones.root, "sync_landing_to_source")
-    listing = list_landing_files(spark, landing_dir)
-    new = ledger.new_files(route_files_df(listing, mapping))
-    rows = new.collect()  # listing-sized, driver-side by design (file ops)
-    if dry_run or not rows:  # no-op poll: skip the claims build entirely
-        return len(rows)
+    listing = list_landing_files(landing_dir, mapping)
+    ledger_rows = ledger.read()  # the one scan: feeds the diff AND the claims
+    new = unsynced(listing, ledger_rows)
+    if dry_run or not new:  # no-op poll: skip the claims build entirely
+        return len(new)
     # Flatten the RELATIVE landing path into the destination name, with
     # destination collisions checked BY PROVENANCE (same relative path
     # re-syncs over its own copy; two different paths claiming one
@@ -239,12 +231,12 @@ def sync_landing_to_source(
         return name if rel_dir == "." else os.path.join(rel_dir, name)
 
     claimed: dict[tuple[str, str], str] = {}
-    for lr in ledger.read().select("path", "domain").collect():
+    for lr in ledger_rows:
         lrel = _rel(lr.path)
         if lrel is not None:
             claimed[(lr.domain, lrel.replace(os.sep, "__"))] = lrel
     swept: set[str] = set()
-    for r in rows:
+    for r in new:
         dest_dir = zones.source(r.domain)
         os.makedirs(dest_dir, exist_ok=True)
         if dest_dir not in swept:  # once per domain dir, not per file
@@ -280,23 +272,19 @@ def sync_landing_to_source(
         tmp = os.path.join(dest_dir, f".{dest_name}.__tmp{os.getpid()}")
         shutil.copy2(r.path, tmp)
         os.replace(tmp, dest)
-    # Record from the MATERIALIZED rows (non-empty here; early return
-    # above): passing `new` back would re-execute the listing+anti-join
-    # plan at write time — a third ledger scan per sync, and a silent
-    # assumption that the ledger hasn't changed since the collect.
-    ledger.record(spark.createDataFrame(rows, new.schema))
-    return len(rows)
+    ledger.record(new)
+    return len(new)
 
 
 def archive_source_files(
-    zones: ZoneLayout, known_domains: set[str]
+    spark: SparkSession, zones: ZoneLayout, known_domains: set[str]
 ) -> dict[str, int]:
     """S9: move raw domain folders out of the source zone — known domains
     to processed, unknown to error (move_sources_files.py:19-42). Returns
     counts per destination zone."""
     _require_local_root(zones.root, "archive_source_files")
     moved = {"processed": 0, "error": 0}
-    for domain in zones.list_domains("source"):
+    for domain in zones.list_domains("source", spark):
         dest_zone = "processed" if domain in known_domains else "error"
         src = Path(zones.source(domain))
         dest = Path(zones.path(dest_zone, domain))

@@ -6,9 +6,7 @@ filesystem; nothing here is S3-specific."""
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -50,15 +48,9 @@ class ZoneLayout:
     def warehouse(self, domain: str | None = None) -> str:
         return self.path("warehouse", domain)
 
-    def list_domains(self, zone: str, spark: SparkSession | None = None) -> list[str]:
+    def list_domains(self, zone: str, spark: SparkSession) -> list[str]:
         """Enumerate immediate child domains of a zone. Design notes:
         docs/DESIGN.md#zones-list-domains"""
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:
-            base = Path(self.path(zone))
-            if not base.exists():
-                return []
-            return sorted(p.name for p in base.iterdir() if p.is_dir())
         jvm = spark._jvm
         base = jvm.org.apache.hadoop.fs.Path(self.path(zone))
         fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -68,14 +60,9 @@ class ZoneLayout:
             s.getPath().getName() for s in fs.listStatus(base) if s.isDirectory()
         )
 
-    def ensure(self, spark: SparkSession | None = None) -> None:
-        """Create every zone directory — through the Hadoop FS API when a
-        session is available (same scheme rule as :meth:`list_domains`)."""
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:
-            for z in self.zones:
-                os.makedirs(self.path(z), exist_ok=True)
-            return
+    def ensure(self, spark: SparkSession) -> None:
+        """Create every zone directory through the Hadoop FS API (same
+        scheme rule as :meth:`list_domains`)."""
         jvm = spark._jvm
         conf = spark._jsc.hadoopConfiguration()
         for z in self.zones:

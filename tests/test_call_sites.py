@@ -18,12 +18,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "nursing_home_data_etl_pipeline_spark"
 
 # (module, def) -> why it stays although no production root reaches it.
-# What an allowlisted def calls is kept with it (normalize_filename via
-# route_filename, cosine via cosine_rounded, stream_csv_landing via
-# start_clean_to_staging).
+# What an allowlisted def calls is kept with it (cosine via cosine_rounded,
+# stream_csv_landing via start_clean_to_staging).
 ALLOWED_UNREACHED = {
-    ("sources.ingest", "route_filename"):
-        "per-file reference for route_files_df (test_properties, perfbench tests)",
     ("functions.vectors", "cosine_rounded"):
         "Column-API cosine; the bit-identity reference for cosine_rounded_prenorm",
     ("functions.vectors", "cosine_rounded_prenorm"):

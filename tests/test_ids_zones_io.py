@@ -177,13 +177,13 @@ def test_etl_metadata_switches_to_sharded(spark):
     assert ids == list(range(1, 501))
 
 
-def test_zone_layout(tmp_path):
+def test_zone_layout(spark, tmp_path):
     z = ZoneLayout(str(tmp_path))
-    z.ensure()
+    z.ensure(spark)
     assert z.staging("provider_info").endswith("/staging/provider_info")
     os.makedirs(z.source("d2"))
     os.makedirs(z.source("d1"))
-    assert z.list_domains("source") == ["d1", "d2"]
+    assert z.list_domains("source", spark) == ["d1", "d2"]
     with pytest.raises(ValueError):
         z.path("nope")
 
@@ -255,9 +255,9 @@ def test_error_sink_records_secondary_quarantine_failure(spark, tmp_path):
 
 
 def test_zone_layout_hadoop_fs_parity(spark, tmp_path):
-    """list_domains/ensure go through the Hadoop FS API whenever a session
-    exists (an s3a:// root must list the real zone, not a driver-local
-    phantom path); on a local root the two implementations must agree."""
+    """list_domains/ensure go through the Hadoop FS API (an s3a:// root
+    must list the real zone, not a driver-local phantom path); on a local
+    root they must agree with the local filesystem."""
     z = ZoneLayout(str(tmp_path))
     z.ensure(spark)
     for zone in z.zones:
@@ -265,4 +265,3 @@ def test_zone_layout_hadoop_fs_parity(spark, tmp_path):
     os.makedirs(z.source("d1"))
     (Path(z.path("source")) / "not_a_dir.csv").write_text("a\n")
     assert z.list_domains("source", spark) == ["d1"]  # files excluded
-    assert z.list_domains("source") == ["d1"]         # active-session path

@@ -12,6 +12,7 @@ from nursing_home_data_etl_pipeline_spark.sources.ingest import (
     list_landing_files,
     normalize_filename,
     route_filename,
+    unsynced,
 )
 from nursing_home_data_etl_pipeline_spark.sources.validate import (
     DEFAULT_REQUIRED_DOMAINS,
@@ -172,12 +173,12 @@ def test_corrupt_ledger_fails_loudly(spark, tmp_path):
 
     ledger_path = str(tmp_path / "ledger")
     ledger = IngestLedger(spark, ledger_path)
-    assert ledger.read().count() == 0  # missing -> empty bootstrap
+    assert len(ledger.read()) == 0  # missing -> empty bootstrap
     os.makedirs(ledger_path)
     with open(os.path.join(ledger_path, "part-00000.parquet"), "wb") as f:
         f.write(b"junk bytes, not parquet")
     with pytest.raises(Exception, match="(?i)parquet|footer|schema"):
-        ledger.read().count()
+        ledger.read()
 
 
 def test_corrupt_staging_fails_validation_loudly(spark, landing, tmp_path):
@@ -212,14 +213,12 @@ def test_pipeline_incremental_rerun(spark, landing, tmp_path):
 
 def test_ledger_dedup(spark, landing, tmp_path):
     zones = ZoneLayout(str(tmp_path / "z"))
-    zones.ensure()
+    zones.ensure(spark)
     ledger = IngestLedger(spark, str(tmp_path / "ledger"))
-    listing = list_landing_files(spark, str(landing))
-    assert ledger.new_files(listing).count() == 5
-    from nursing_home_data_etl_pipeline_spark.sources.ingest import route_files_df
-
-    ledger.record(route_files_df(listing))
-    assert ledger.new_files(listing).count() == 0
+    listing = list_landing_files(str(landing))
+    assert len(unsynced(listing, ledger.read())) == 5
+    ledger.record(listing)
+    assert len(unsynced(listing, ledger.read())) == 0
 
 
 def test_sync_same_basename_in_subdirs_not_lost(spark, tmp_path):
@@ -238,7 +237,7 @@ def test_sync_same_basename_in_subdirs_not_lost(spark, tmp_path):
     (landing / "mar" / "NH_Penalties.csv").write_text("a,b\n1,mar\n")
 
     zones = ZoneLayout(str(tmp_path / "nz"))
-    zones.ensure()
+    zones.ensure(spark)
     ledger = IngestLedger(spark, str(tmp_path / "nledger"))
     n = sync_landing_to_source(spark, str(landing), zones, ledger)
     assert n == 2
@@ -249,7 +248,7 @@ def test_sync_same_basename_in_subdirs_not_lost(spark, tmp_path):
     assert len(files) == 2  # both months present, neither overwritten
     contents = {open(os.path.join(dest, f)).read() for f in files}
     assert contents == {"a,b\n1,feb\n", "a,b\n1,mar\n"}
-    assert ledger.read().count() == 2
+    assert len(ledger.read()) == 2
 
 
 def test_sync_inplace_update_resyncs_not_bricks(spark, tmp_path):
@@ -269,7 +268,7 @@ def test_sync_inplace_update_resyncs_not_bricks(spark, tmp_path):
     f = landing / "NH_Penalties.csv"
     f.write_text("a,b\n1,old\n")
     zones = ZoneLayout(str(tmp_path / "uz"))
-    zones.ensure()
+    zones.ensure(spark)
     ledger = IngestLedger(spark, str(tmp_path / "uledger"))
     assert sync_landing_to_source(spark, str(landing), zones, ledger) == 1
 
@@ -297,7 +296,7 @@ def test_sync_tmp_name_outside_data_namespace(spark, tmp_path):
     landing.mkdir()
     (landing / "NH_Penalties.csv.__tmp").write_text("a,b\n1,first\n")
     zones = ZoneLayout(str(tmp_path / "tz"))
-    zones.ensure()
+    zones.ensure(spark)
     ledger = IngestLedger(spark, str(tmp_path / "tledger"))
     assert sync_landing_to_source(spark, str(landing), zones, ledger) == 1
 
@@ -310,9 +309,64 @@ def test_sync_tmp_name_outside_data_namespace(spark, tmp_path):
     assert contents == {"a,b\n1,first\n", "a,b\n1,second\n"}  # both survive
 
 
+def test_sync_spark_job_budget(spark, landing, tmp_path):
+    """Sync's only Spark work is one ledger read (none before the first
+    record) and one ledger append; the diff, routing and provenance claims
+    run on the driver. Bootstrap: 1 job, incremental with new files: 2,
+    no-op poll: 1. The DataFrame listing + anti-join path ran 5 / 4 / 2."""
+    import uuid
+
+    from nursing_home_data_etl_pipeline_spark.sources.ingest import (
+        sync_landing_to_source,
+    )
+
+    sc = spark.sparkContext
+    zones = ZoneLayout(str(tmp_path / "jz"))
+    zones.ensure(spark)
+    ledger = IngestLedger(spark, str(tmp_path / "jledger"))
+
+    def sync_jobs():
+        group = f"sync-budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "sync job budget")
+        try:
+            n = sync_landing_to_source(spark, str(landing), zones, ledger)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        return n, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert sync_jobs() == (5, 1)  # bootstrap: no ledger yet, one append
+    (landing / "NH_Penalties_Jul2025.csv").write_text(PENALTIES_CSV)
+    assert sync_jobs() == (1, 2)  # incremental: one read, one append
+    assert sync_jobs() == (0, 1)  # no-op poll: one read
+
+
+def test_sync_dry_run_has_no_side_effects(spark, landing, tmp_path):
+    """dry_run returns the count of new files but copies nothing into the
+    source zone and writes no ledger, so a real sync afterwards still
+    syncs every one of them."""
+    import os
+
+    from nursing_home_data_etl_pipeline_spark.sources.ingest import (
+        sync_landing_to_source,
+    )
+
+    zones = ZoneLayout(str(tmp_path / "dz"))
+    zones.ensure(spark)
+    ledger = IngestLedger(spark, str(tmp_path / "dledger"))
+    assert sync_landing_to_source(spark, str(landing), zones, ledger, dry_run=True) == 5
+    assert os.listdir(zones.source()) == []
+    assert not os.path.exists(ledger.path)
+    assert sync_landing_to_source(spark, str(landing), zones, ledger) == 5
+    assert zones.list_domains("source", spark) == [
+        "penalties", "provider_info", "qualitymsr_mds", "survey_summary", "unknown",
+    ]
+    assert len(ledger.read()) == 5
+
+
 def test_validation_gate_raises(spark, tmp_path):
     zones = ZoneLayout(str(tmp_path / "empty_zones"))
-    zones.ensure()
+    zones.ensure(spark)
     with pytest.raises(ValidationError):
         pipeline.run(spark, zones)
 
@@ -329,7 +383,7 @@ def test_merge_warehouse_error_propagates_not_bootstraps(spark, tmp_path):
     from nursing_home_data_etl_pipeline_spark.zones import ZoneLayout
 
     zones = ZoneLayout(str(tmp_path / "z"))
-    zones.ensure()
+    zones.ensure(spark)
 
     # First run: bootstrap (target absent).
     src = str(tmp_path / "facility_out")
@@ -386,7 +440,7 @@ def test_merge_warehouse_recovers_crashed_swap(spark, tmp_path):
     from nursing_home_data_etl_pipeline_spark.zones import ZoneLayout
 
     zones = ZoneLayout(str(tmp_path / "rz"))
-    zones.ensure()
+    zones.ensure(spark)
     src1 = str(tmp_path / "fac1")
     spark.createDataFrame(
         [("f1", "A"), ("f2", "B")], ["facility_number", "facility_name"]
@@ -567,7 +621,7 @@ def test_validation_bug_parity_status_vs_raise(spark, tmp_path):
     from nursing_home_data_etl_pipeline_spark.zones import ZoneLayout
 
     zones = ZoneLayout(str(tmp_path / "z"))
-    zones.ensure()
+    zones.ensure(spark)
     spark.createDataFrame([("x",)], ["c"]).write.parquet(zones.staging("provider_info"))
     domains = ("provider_info", "penalties")
 
@@ -726,7 +780,7 @@ def test_hidden_landing_files_are_ignored_not_half_ingested(spark, tmp_path):
     (land / ".NH_Secret.csv").write_text("a,b\n9,9\n")
     (land / "_staging.csv").write_text("a,b\n8,8\n")
     (land / ".hidden_dir" / "NH_ProviderInfo_Mar2025.csv").write_text("a,b\n3,4\n")
-    names = [r.file_name for r in list_landing_files(spark, str(land)).collect()]
+    names = [r.file_name for r in list_landing_files(str(land))]
     assert names == ["NH_ProviderInfo_Feb2025.csv"]
 
 
@@ -778,7 +832,7 @@ def test_merge_warehouse_dedupes_multi_row_source(spark, tmp_path):
     from nursing_home_data_etl_pipeline_spark.zones import ZoneLayout
 
     zones = ZoneLayout(str(tmp_path))
-    zones.ensure()
+    zones.ensure(spark)
     out = str(tmp_path / "facility_out")
     spark.createDataFrame(
         [("f1", "February Name"), ("f1", "March Name"), ("f2", "Solo")],
@@ -804,7 +858,7 @@ def test_merge_warehouse_multi_drop_newest_wins_by_recency(spark, tmp_path):
     from nursing_home_data_etl_pipeline_spark.zones import ZoneLayout
 
     zones = ZoneLayout(str(tmp_path))
-    zones.ensure()
+    zones.ensure(spark)
     out = str(tmp_path / "facility_out")
     t_feb = datetime.datetime(2025, 2, 1, 12, 0, 0)
     t_mar = datetime.datetime(2025, 3, 1, 12, 0, 0)
@@ -832,7 +886,7 @@ def test_merge_warehouse_fanout_dim_keeps_newest_drop_group(spark, tmp_path):
     from nursing_home_data_etl_pipeline_spark.zones import ZoneLayout
 
     zones = ZoneLayout(str(tmp_path))
-    zones.ensure()
+    zones.ensure(spark)
     out = str(tmp_path / "penalties_out")
     t_feb = datetime.datetime(2025, 2, 1, 12, 0, 0)
     t_mar = datetime.datetime(2025, 3, 1, 12, 0, 0)
@@ -902,7 +956,7 @@ def test_source_synced_at_header_refused_loudly(spark, tmp_path):
     from nursing_home_data_etl_pipeline_spark import transforms
 
     zones = ZoneLayout(str(tmp_path / "zones"))
-    zones.ensure()
+    zones.ensure(spark)
     src = tmp_path / "zones" / "source" / "provider_info"
     src.mkdir(parents=True)
     (src / "a.csv").write_text(
@@ -922,7 +976,7 @@ def test_fanout_failures_quarantine_and_spare_the_other_branches(
     from nursing_home_data_etl_pipeline_spark import transforms
 
     zones = ZoneLayout(str(tmp_path / "zones"))
-    zones.ensure()
+    zones.ensure(spark)
     clash = "CMS Certification Number (CCN),Synced_At\n015009,x\n"
     sources = {
         "penalties": clash,
@@ -971,7 +1025,7 @@ def test_archive_versions_instead_of_overwriting(spark, tmp_path):
     )
 
     zones = ZoneLayout(str(tmp_path / "z"))
-    zones.ensure()
+    zones.ensure(spark)
     pdir = tmp_path / "z" / "processed" / "penalties"
     pdir.mkdir(parents=True)
     (pdir / "x.csv").write_text("OLD ARCHIVED RAW (feb)")
@@ -980,7 +1034,7 @@ def test_archive_versions_instead_of_overwriting(spark, tmp_path):
     sdir.mkdir(parents=True)
     (sdir / "x.csv").write_text("NEW RAW (mar)")
 
-    moved = archive_source_files(zones, known_domains={"penalties"})
+    moved = archive_source_files(spark, zones, known_domains={"penalties"})
     assert moved == {"processed": 1, "error": 0}
     assert (pdir / "x.csv").read_text() == "OLD ARCHIVED RAW (feb)"
     assert (pdir / "x.1.csv").read_text() == "OLDER ARCHIVED RAW (jan)"
@@ -1003,14 +1057,14 @@ def test_archive_skips_hidden_files(spark, tmp_path):
     )
 
     zones = ZoneLayout(str(tmp_path / "z"))
-    zones.ensure()
+    zones.ensure(spark)
     sdir = tmp_path / "z" / "source" / "penalties"
     sdir.mkdir(parents=True)
     (sdir / "y.csv").write_text("real data")
     (sdir / f".y.csv.__tmp{os.getpid()}").write_text("half-written")
     (sdir / "_SUCCESS").write_text("")
 
-    moved = archive_source_files(zones, known_domains={"penalties"})
+    moved = archive_source_files(spark, zones, known_domains={"penalties"})
     assert moved == {"processed": 1, "error": 0}
     # hidden files stayed; the source dir is therefore NOT removed
     assert sorted(p.name for p in sdir.iterdir()) == [
@@ -1053,7 +1107,7 @@ def test_uri_scheme_roots_fail_loudly(spark, tmp_path):
     with _pytest.raises(ValueError, match="LOCAL-filesystem"):
         sync_landing_to_source(spark, str(landing), uri_zones, ledger)
     with _pytest.raises(ValueError, match="LOCAL-filesystem"):
-        archive_source_files(uri_zones, known_domains=set())
+        archive_source_files(spark, uri_zones, known_domains=set())
     with _pytest.raises(ValueError, match="local-filesystem"):
         RunLog(f"file://{tmp_path}/z/run_log.jsonl")
 
@@ -1085,7 +1139,7 @@ def test_cleaning_skips_existing_but_empty_domain_dir(spark, tmp_path):
     )
 
     zones = ZoneLayout(str(tmp_path / "z"))
-    zones.ensure()
+    zones.ensure(spark)
     (tmp_path / "z" / "source" / "penalties").mkdir(parents=True)
     (tmp_path / "z" / "source" / "surveys").mkdir(parents=True)
     (tmp_path / "z" / "source" / "surveys" / "s.csv").write_text(

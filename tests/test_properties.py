@@ -296,43 +296,6 @@ def test_asof_join_matches_naive_model(spark, left_rows, right_rows):
 
 
 # ---------------------------------------------------------------------------
-# Filename router: driver-side vs distributed DataFrame implementation
-# ---------------------------------------------------------------------------
-
-_file_names = st.lists(
-    st.text(
-        alphabet=st.characters(codec="ascii", exclude_characters="\x00\n\r"),
-        min_size=0,
-        max_size=25,
-    ),
-    min_size=1,
-    max_size=15,
-)
-
-
-@pytest.mark.usefixtures("spark")
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(names_list=_file_names)
-def test_route_files_df_matches_driver_router(spark, names_list):
-    """The distributed when()-chain router must route EVERY name exactly as
-    the driver-side route_filename — same normalization (extension strip,
-    NH_/underscore removal, lowercase) and same first-pattern-wins order —
-    for arbitrary ascii filenames."""
-    from nursing_home_data_etl_pipeline_spark.sources.ingest import route_files_df
-
-    df = spark.createDataFrame(
-        [(i, n) for i, n in enumerate(names_list)], "i long, file_name string"
-    )
-    got = {r.i: r.domain for r in route_files_df(df).collect()}
-    want = {i: route_filename(n) for i, n in enumerate(names_list)}
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
 # Exact dedup and n-gram Jaccard vs naive models
 # ---------------------------------------------------------------------------
 

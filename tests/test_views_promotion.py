@@ -11,7 +11,7 @@ def test_recover_dir_heals_crashed_swap(spark, tmp_path):
     from nursing_home_data_etl_pipeline_spark.zones import ZoneLayout
 
     zones = ZoneLayout(str(tmp_path))
-    zones.ensure()
+    zones.ensure(spark)
     spark.createDataFrame([("f1", 5)], "facility_number string, rating int")\
         .write.parquet(zones.warehouse("dim_rating_t"))
     # crash between the renames: target gone, __old is the only copy
